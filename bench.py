@@ -4,7 +4,7 @@
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   table dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[] parallelism (default 32)
+  SPARK_GRAFT_CPUS     local[] parallelism (default: the machine's cores)
   SPARK_GRAFT_BENCH_ONLY  comma-separated query subset
   SPARK_GRAFT_TURNS    override transcript turn count (default 1e6 * sf)
 
@@ -23,7 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 ONLY = {q for q in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",") if q}
 
 
@@ -110,12 +110,7 @@ def main() -> None:
 
     # Warm-up: spawn Python workers, distribute the py-files zip, trigger
     # codegen — steady-state throughput is what scales with cores, and what
-    # a long-running cluster job actually sees. The two-python-stage warm-up
-    # for the extract_* queries deliberately happens AFTER the headline:
-    # measured r3, running a chained wrap→extract job first destabilizes the
-    # python worker pool for the next few jobs (2.2s headline → 8-12s,
-    # recovering over ~3 runs) — the headline must see a pool shaped like
-    # its own single-python-stage job, like a real cluster run would.
+    # a long-running cluster job actually sees.
     log("warm-up pass...")
     run_extraction(spark.read.parquet(tr_path).limit(2000)).agg(
         F.sum("n_spans")
@@ -235,13 +230,6 @@ def main() -> None:
         )
     bench("transcripts_conv_stats", run_conv_stats)
 
-    # pure-JVM queries FIRST: the chained two-python-stage pool warm-up the
-    # extract_* block needs does not just disturb later PYTHON stages — on
-    # this lazily-backed microVM the second 32-worker pool's RSS forces the
-    # JVM to first-touch fresh pages mid-query, and the JVM-heavy dedup
-    # queries measured 2-4x slower after it (minhash_lsh_pairs warm 5.3 s
-    # clean vs 10-27 s after the pdfish warm-up, ext-busy 0.00 throughout).
-    # Order: JVM-only queries, THEN the pool warm-up, THEN extract_*.
     for name, fn in [
         ("q1_pricing_summary", relational.q1_pricing_summary),
         ("q_revenue_by_nation", relational.q_revenue_by_nation),
@@ -264,14 +252,6 @@ def main() -> None:
         ("ann_lsh_topk", similarity.ann_lsh_topk),
         ("ann_ivf_scaled_topk", similarity.ann_ivf_scaled_topk),
         ("simhash_neardup_pairs", dedup.simhash_neardup_pairs),
-    ]:
-        bench(name, lambda fn=fn: fn(spark, SF_DIR).count())
-
-    # NOW warm the two-python-stage worker pool (wrap→extract chains spawn
-    # a second set of workers) for the extract_* queries below
-    extract_docs.extract_pdfish_docs(spark, "/root/testdata/sf0.001").count()
-
-    for name, fn in [
         ("extract_html_docs", extract_docs.extract_html_docs),
         ("extract_pdfish_docs", extract_docs.extract_pdfish_docs),
         ("extract_pdfish_columns_docs", extract_docs.extract_pdfish_columns_docs),

@@ -44,3 +44,101 @@ def test_pdfish_batch_equals_slow_path():
     res = extract_pdfish_many(payloads)
     for i, p in enumerate(payloads):
         assert res[i] == extract_pdfish(p), f"payload {i}"
+
+
+# pass-through columns of every input type the extraction stage must hand
+# back unchanged (the stage returns the input batch's own Arrow arrays)
+PASS_SCHEMA = (
+    "id bigint, b tinyint, s smallint, i int, f float, d double, "
+    "dec decimal(12,3), flag boolean, name string, raw binary, day date, "
+    "ts timestamp, ts_ntz timestamp_ntz, xs array<int>, m map<string,int>, "
+    "st struct<a:int,c:string>, text string"
+)
+
+
+def _pass_row(i: int, payload):
+    import datetime as dt
+    from decimal import Decimal
+
+    if i % 5 == 4:  # every pass-through column null
+        return (i,) + (None,) * 15 + (payload,)
+    return (
+        i, i % 100 - 50, i * 7, -i, i / 4, i / 3, Decimal(i) / 8, i % 2 == 0,
+        f"row-{i}", bytes([i % 256, 0, 255]), dt.date(2020, 1, 1 + i % 28),
+        dt.datetime(2021, 2, 3, 4, 5, i % 60, i), dt.datetime(2022, 5, 6, 7, i % 60),
+        [i, None, -i] if i % 3 else [], {"k": i, "z": None} if i % 4 else {},
+        (i, None if i % 2 else f"c{i}"), payload,
+    )
+
+
+def _stage_payloads():
+    # generator turns of every archetype, then null, empty and other
+    # zero-span payloads, then the malformed set
+    return [build_turn(conv_id_of(c), t)["text"] for c in range(8) for t in range(3)] + [
+        None, "", "   ", "%PDFISH 612 792\n", "<html><body></body></html>",
+    ] + MALFORMED
+
+
+def _assert_stage_equals_rows(spark, max_records=None):
+    from univer_ocr_spark.extract import extract_single
+    from univer_ocr_spark.spark.pipeline import extract_stage
+
+    payloads = _stage_payloads()
+    df = spark.createDataFrame([_pass_row(i, p) for i, p in enumerate(payloads)], PASS_SCHEMA)
+    if max_records:
+        df = df.coalesce(1)  # one partition, many Arrow batches
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if max_records:
+        spark.conf.set(key, str(max_records))
+    try:
+        got = {r["id"]: r for r in extract_stage(df).collect()}
+    finally:
+        spark.conf.set(key, old)
+    want_rows = {r["id"]: r for r in df.collect()}
+    assert sorted(got) == list(range(len(payloads)))
+    for i, p in enumerate(payloads):
+        r, w = got[i], want_rows[i]
+        assert [r[c] for c in df.columns] == list(w), f"pass-through row {i}"
+        want = extract_single(p)
+        assert r["extracted_text"] == want["extracted_text"], f"row {i}"
+        assert [s.asDict() for s in r["spans"]] == want["spans"], f"row {i}"
+        for c in ("kind", "n_units", "n_spans", "n_chars"):
+            assert r[c] == want[c], f"row {i} {c}"
+
+
+def test_arrow_stage_equals_extract_payload(spark):
+    _assert_stage_equals_rows(spark)
+
+
+def test_arrow_stage_across_small_batches(spark):
+    _assert_stage_equals_rows(spark, max_records=3)
+
+
+def test_payload_builder_runs_per_batch(spark):
+    """``build_payloads`` sees each Arrow batch: with 3-row batches every
+    payload carries its batch's row count, and the builder's input column
+    is dropped like a payload."""
+    from univer_ocr_spark.extract import extract_payload
+    from univer_ocr_spark.spark.pipeline import EXTRA_FIELDS, extract_stage
+
+    def build(batch):
+        n = batch.num_rows
+        return [None if w is None else f"{w} of {n}"
+                for w in batch.column("word").to_pylist()]
+
+    words = [f"w{i}" if i % 4 else None for i in range(10)]
+    df = spark.createDataFrame(list(enumerate(words)), "id bigint, word string").coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        out = extract_stage(df, payload_col="word", drop_payload=True, build_payloads=build)
+        rows = sorted(out.collect(), key=lambda r: r["id"])
+    finally:
+        spark.conf.set(key, old)
+    assert out.columns == ["id"] + [f.name for f in EXTRA_FIELDS]
+    for r, w in zip(rows, words):
+        n = 1 if r["id"] == 9 else 3  # batches of 3, 3, 3, 1
+        want = extract_payload("" if w is None else f"{w} of {n}")
+        assert (r["extracted_text"], [tuple(s) for s in r["spans"]], r["kind"]) == want

@@ -222,7 +222,7 @@ run 2 = {runs[1]['efficiency']} (delta {delta:.3f}; repeatability bar ±0.05)**
 (target >= 0.8)
 
 Notes:
-- The extraction stage is shuffle-free (single mapInPandas over parquet
+- The extraction stage is shuffle-free (single mapInArrow over parquet
   partitions), so parallel efficiency measures task scheduling + Arrow +
   Python-worker scaling, the same components that dominate on a real
   multi-executor cluster at fixed data-per-executor.

@@ -10,7 +10,7 @@ is the zero-ML oracle — our generator/oracle pair plays the same roles over
 transcript turns instead of rendered pixels).
 
 Architecture is Spark-first: one turn = one row; all per-turn parsing runs
-inside Arrow-batched ``mapInPandas`` stages; cross-turn structure
+inside one Arrow-batched ``mapInArrow`` stage per query; cross-turn structure
 (partitioning, salting, ordering, checkpoint/resume) is DataFrame-level.
 """
 

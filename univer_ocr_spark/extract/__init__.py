@@ -7,7 +7,7 @@ pipeline must match this oracle byte-for-byte per turn under stable
 ``(conv_id, turn_idx)`` ordering; pytest enforces it against the generator's
 by-construction goldens.
 
-The same pure functions are reused *inside* the Spark ``mapInPandas`` stage —
+The same pure functions are reused *inside* the Spark ``mapInArrow`` stage —
 one implementation, two harnesses (like the reference sharing its interpreter
 between the web oracle route and the model pipeline, ref: views/main.py:88-99
 vs my_model/model.py:552-656).

@@ -7,15 +7,17 @@ golden-by-construction idea the reference's generator embodies
 (ref: generate.py:103-224): the oracle doesn't re-implement extraction, it
 knows what the answer must be because we built the payload.
 
-This is how the driver's CORRECTNESS gate exercises the actual mapInPandas
-extraction stage against an independent expectation.
+This is how the correctness gate (every query against its
+``oracle_sql()`` twin) exercises the actual ``mapInArrow`` extraction stage
+against an independent expectation. Every query crosses into Python once:
+html/markup payloads are JVM-side string concatenation, pdfish glyph pages
+are laid out inside the extraction stage (``_glyph_pages``).
 """
 
 from __future__ import annotations
 
 import re
 from random import Random
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -60,7 +62,7 @@ _MARKUP_SAFE_SQL = f"""NOT ({_FLAT_SQL} LIKE '```%'
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single small file = one partition; the downstream mapInPandas work is
+    # single small file = one partition; the downstream extraction work is
     # CPU-bound, so spread it (tiny shuffle, irrelevant at real scale)
     return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
         spark.sparkContext.defaultParallelism
@@ -73,6 +75,19 @@ def _sanitize(col):
         F.lit(">"),
         F.lit(")"),
     )
+
+
+def _glyph_pages(d: DataFrame, layout) -> DataFrame:
+    """Extraction stage over ``layout(doc_id, text)`` pdfish pages, laid
+    out inside the stage's batch function so the query has one Python
+    node; the output carries ``doc_id`` and the extraction columns."""
+
+    def build(batch):
+        return [layout(i, t) for i, t in zip(batch.column("doc_id").to_pylist(),
+                                             batch.column("text").to_pylist())]
+
+    return extract_stage(d.select("doc_id", "text"), drop_payload=True,
+                         build_payloads=build)
 
 
 def extract_html_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -295,25 +310,8 @@ def extract_pdfish_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode each doc as a shuffled glyph stream, run the real extraction
     stage (y-cluster → x-sort → word-gap spacing). Expected = whitespace-
     normalized text."""
-    import pandas as pd
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def wrap(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "text": [
-                        _pdfish_payload(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    wrapped = d.mapInPandas(wrap, schema="doc_id long, text string")
     return (
-        extract_stage(wrapped)
+        _glyph_pages(_docs(spark, sf_dir), _pdfish_payload)
         .select("doc_id", "extracted_text")
         .orderBy("doc_id")
     )
@@ -363,29 +361,11 @@ def extract_pdfish_columns_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected flat text = whitespace-normalized doc text (column-major order
     restores the original word order by construction, for any number of
     columns); n_units = line count."""
-    import pandas as pd
-
     # empty/whitespace-only docs produce a glyph-less page (0 units) while
     # the word-count oracle would state 1 — exclude identically on both
     # sides, like the html twins
-    d = _docs(spark, sf_dir).filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", "text"
-    )
-
-    def wrap(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "text": [
-                        _pdfish_columns_payload(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    wrapped = d.mapInPandas(wrap, schema="doc_id long, text string")
-    out = extract_stage(wrapped)
+    d = _docs(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
+    out = _glyph_pages(d, _pdfish_columns_payload)
     return out.select(
         "doc_id",
         F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
@@ -446,9 +426,7 @@ def extract_pdfish_title_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= TITLE_MAX_WORDS words on both engines so the page geometry is fixed
     (two columns, page width 612 — the spanning threshold must not move
     with content)."""
-    import pandas as pd
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = _docs(spark, sf_dir)
     # count NONEMPTY tokens (leading non-space whitespace would otherwise
     # produce a phantom '' token and shift the expected unit count) and cap
     # word length at 32 chars (a longer word would bridge the fixed gutter)
@@ -461,21 +439,7 @@ def extract_pdfish_title_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.size(toks) <= TITLE_MAX_WORDS)
         & (F.size(F.filter(toks, lambda x: F.length(x) > 32)) == 0)
     )
-
-    def wrap(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "text": [
-                        _pdfish_title_payload(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    wrapped = d.mapInPandas(wrap, schema="doc_id long, text string")
-    out = extract_stage(wrapped)
+    out = _glyph_pages(d, _pdfish_title_payload)
     return out.select(
         "doc_id",
         F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
@@ -547,9 +511,7 @@ def extract_pdfish_overlap_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     region below; n_units = 1 + word count. Docs filtered to
     <= OVERLAP_MAX_WORDS words of <= OVERLAP_MAX_WORD_LEN chars on both
     engines so the geometry is fixed."""
-    import pandas as pd
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = _docs(spark, sf_dir)
     toks = F.filter(
         F.split(F.trim(F.lower("text")), WS_CLASS + "+"),
         lambda x: x != "",
@@ -559,21 +521,7 @@ def extract_pdfish_overlap_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.size(toks) <= OVERLAP_MAX_WORDS)
         & (F.size(F.filter(toks, lambda x: F.length(x) > OVERLAP_MAX_WORD_LEN)) == 0)
     )
-
-    def wrap(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "text": [
-                        _pdfish_overlap_payload(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    wrapped = d.mapInPandas(wrap, schema="doc_id long, text string")
-    out = extract_stage(wrapped)
+    out = _glyph_pages(d, _pdfish_overlap_payload)
     return out.select(
         "doc_id",
         F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
@@ -649,9 +597,7 @@ def extract_pdfish_heights_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     HEIGHTS_MAX_WORD_LEN chars on both engines so the geometry is fixed.
     Reference analog: per-component crop separation of overlapping
     components (ref: interpreter.py:133-171, :303-308)."""
-    import pandas as pd
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = _docs(spark, sf_dir)
     toks = F.filter(
         F.split(F.trim(F.lower("text")), WS_CLASS + "+"),
         lambda x: x != "",
@@ -661,21 +607,7 @@ def extract_pdfish_heights_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.size(toks) <= HEIGHTS_MAX_WORDS)
         & (F.size(F.filter(toks, lambda x: F.length(x) > HEIGHTS_MAX_WORD_LEN)) == 0)
     )
-
-    def wrap(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "text": [
-                        _pdfish_heights_payload(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    wrapped = d.mapInPandas(wrap, schema="doc_id long, text string")
-    out = extract_stage(wrapped)
+    out = _glyph_pages(d, _pdfish_heights_payload)
     return out.select(
         "doc_id",
         F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(

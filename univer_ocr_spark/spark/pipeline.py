@@ -18,12 +18,16 @@ Scale design (SURVEY.md X14 — the one thing the reference lacks):
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from itertools import chain
+from typing import TYPE_CHECKING, Callable, Iterator, List
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from univer_ocr_spark import EXTRACTION_VERSION
 from univer_ocr_spark.extract import extract_payloads_batch
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 SPAN_TYPE = T.ArrayType(
     T.StructType(
@@ -46,51 +50,71 @@ EXTRA_FIELDS = [
 
 
 def extract_stage(df: DataFrame, payload_col: str = "text",
-                  drop_payload: bool = False) -> DataFrame:
-    """Append extraction columns via one Arrow-batched ``mapInPandas`` stage.
+                  drop_payload: bool = False,
+                  build_payloads: Callable[["pa.RecordBatch"], List[str]] | None = None,
+                  ) -> DataFrame:
+    """Append extraction columns via one Arrow-batched ``mapInArrow`` stage.
 
     One stage, no shuffle: Catalyst keeps upstream filters/pruning below it,
-    and everything downstream sees plain columns.
+    and everything downstream sees plain columns. Pass-through columns go
+    back to the JVM as the input batch's own Arrow arrays; ``spans`` is one
+    ``ListArray<struct<unit,start,end>>`` per batch, built from flat int32
+    buffers plus per-row offsets.
+
+    ``build_payloads`` (input batch → one payload string per row) runs
+    inside the extraction batch function, so a query that synthesizes its
+    payloads still crosses into Python once; ``payload_col`` then names the
+    builder's input column, which ``drop_payload`` drops like a payload.
 
     ``drop_payload=True`` excludes the raw payload from the OUTPUT batch —
     the extracted table should not duplicate input payloads, and at KB-scale
-    payloads this halves the Python→JVM Arrow traffic (mapInPandas cannot be
-    column-pruned from above).
+    payloads this halves the Python→JVM Arrow traffic (a Python map stage
+    cannot be column-pruned from above).
     """
-    import pandas as pd
-
-    out_fields = [f for f in df.schema.fields
-                  if not (drop_payload and f.name == payload_col)]
+    keep = [i for i, f in enumerate(df.schema.fields)
+            if not (drop_payload and f.name == payload_col)]
+    out_fields = [df.schema.fields[i] for i in keep]
     out_schema = T.StructType(out_fields + EXTRA_FIELDS)
+    names = [f.name for f in out_schema.fields]
 
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            texts: List[str] = pdf[payload_col].tolist()
-            ext, spans_col, kinds, n_units, n_spans, n_chars = [], [], [], [], [], []
-            for text, spans, kind in extract_payloads_batch(texts):
-                ext.append(text)
-                # r6: hand Arrow the raw (unit, start, end) tuples — pyarrow
-                # maps positional tuples onto the declared struct fields, so
-                # the per-span dict build (~30% of the headline's span
-                # serialization cost at 1M turns) disappears; values are
-                # byte-identical (goldens + stream==batch tests pin this)
-                spans_col.append(spans)
-                kinds.append(kind)
-                n_units.append(spans[-1][0] + 1 if spans else 0)
-                n_spans.append(len(spans))
-                n_chars.append(len(text))
-            if drop_payload:
-                pdf = pdf.drop(columns=[payload_col])
-            yield pdf.assign(
-                extracted_text=ext,
-                spans=spans_col,
-                kind=kinds,
-                n_units=pd.array(n_units, dtype="int32"),
-                n_spans=pd.array(n_spans, dtype="int32"),
-                n_chars=pd.array(n_chars, dtype="int32"),
+    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        import numpy as np
+        import pyarrow as pa
+
+        for batch in batches:
+            payloads = (build_payloads(batch) if build_payloads
+                        else batch.column(payload_col).to_pylist())
+            texts, spans_col, kinds = (
+                zip(*extract_payloads_batch(payloads)) if payloads else ((), (), ()))
+            counts = np.fromiter(map(len, spans_col), np.int32, len(spans_col))
+            offsets = np.zeros(len(counts) + 1, np.int32)
+            np.cumsum(counts, out=offsets[1:])
+            flat = np.fromiter(chain.from_iterable(chain.from_iterable(spans_col)),
+                               np.int32, 3 * int(offsets[-1])).reshape(-1, 3)
+            units = flat[:, 0]
+            # a row's unit count is its last span's unit + 1 (0 without spans)
+            n_units = np.zeros(len(counts), np.int32)
+            has = counts > 0
+            n_units[has] = units[offsets[1:][has] - 1] + 1
+            spans = pa.ListArray.from_arrays(
+                pa.array(offsets),
+                pa.StructArray.from_arrays(
+                    [pa.array(units), pa.array(flat[:, 1]), pa.array(flat[:, 2])],
+                    names=["unit", "start", "end"]),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(i) for i in keep] + [
+                    pa.array(texts, pa.string()),
+                    spans,
+                    pa.array(kinds, pa.string()),
+                    pa.array(n_units),
+                    pa.array(counts),
+                    pa.array(np.fromiter(map(len, texts), np.int32, len(texts))),
+                ],
+                names=names,
             )
 
-    return df.mapInPandas(fn, schema=out_schema)
+    return df.mapInArrow(fn, schema=out_schema)
 
 
 def detect_skewed_convs(df: DataFrame, threshold: int = 10000) -> List[str]:

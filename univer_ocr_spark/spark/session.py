@@ -17,7 +17,7 @@ from pyspark.sql import SparkSession
 def get_spark(master: str | None = None, app_name: str = "univer_ocr_spark",
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # match core count in local mode — 200 default just adds scheduling
