@@ -62,7 +62,9 @@ def main() -> None:
         dedup._packed_sigs(dedup._exploded_shingles(spark, SF_DIR)).count()
 
     def p_candidates():
-        dedup._lsh_candidates(dedup._exploded_shingles(spark, SF_DIR)).count()
+        dedup._lsh_candidates_from_sigs(
+            dedup._packed_sigs(dedup._exploded_shingles(spark, SF_DIR))
+        ).count()
 
     # ---- whole declared queries (bench.py methodology: .count()) -----------
     def q(fn):

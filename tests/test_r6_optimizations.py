@@ -5,9 +5,10 @@
    2^8), and the two-stage cascade's final survivor set EQUALS the
    single-stage exact filter's set — the property that makes the cheap
    stage-1 pass semantics-free.
-2. Bucket pair generation (groupBy key + array_sort(collect_list) +
-   combination explode) emits exactly the multiset of doc_a < doc_b pairs
-   the former self-join produced.
+2. Bucket pair generation (dedup.bucket_pairs: groupBy key +
+   array_sort(collect_list) + combination explode) emits exactly the
+   multiset of doc_a < doc_b pairs the keyed self-join produces, for every
+   key/id shape its callers use.
 """
 
 from __future__ import annotations
@@ -67,6 +68,16 @@ def test_compressed_prefilter_superset_and_cascade_equality(spark):
     assert cascade == exact
 
 
+def _self_join_pairs(df, keys, id_col):
+    l, r = df.alias("l"), df.alias("r")
+    cond = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
+    for k in keys:
+        cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
+    return l.join(r, cond).select(
+        F.col(f"l.{id_col}").alias("doc_a"), F.col(f"r.{id_col}").alias("doc_b")
+    )
+
+
 def test_bucket_pair_generation_matches_self_join(spark):
     # synthetic buckets incl. a singleton (emits nothing), a pair, and a
     # 4-doc bucket (emits all 6 combinations), with unsorted insert order
@@ -75,34 +86,25 @@ def test_bucket_pair_generation_matches_self_join(spark):
         ("k2", 3), ("k2", 1),
         ("k3", 4),
     ]
-    df = spark.createDataFrame(rows, ["key", "doc_id"])
-    l, r = df.alias("l"), df.alias("r")
-    joined = (
-        l.join(r, (F.col("l.key") == F.col("r.key"))
-               & (F.col("l.doc_id") < F.col("r.doc_id")))
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-    )
-    buckets = (
-        df.groupBy("key")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    bucketed = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ids") - 1),
-                    lambda i: F.transform(
-                        F.slice(F.col("ids"), i + 1, F.size("ids")),
-                        lambda x: F.struct(
-                            F.get(F.col("ids"), i - 1).alias("doc_a"),
-                            x.alias("doc_b"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.doc_a", "p.doc_b")
-    a = sorted(map(tuple, joined.collect()))
-    b = sorted(map(tuple, bucketed.collect()))
-    assert a == b and len(a) == 1 + 6
+    # the caller shapes: one key column (shingles), a two-column key
+    # (LSH/SimHash bands — pair (2, 5) shares two bands and is emitted
+    # twice, once per band), and an id column not named doc_id (sign-LSH)
+    banded = [
+        (0, "a", 5), (0, "a", 2), (0, "a", 9),
+        (1, "a", 5), (1, "a", 2),
+        (1, "b", 9), (1, "b", 3),
+        (2, "a", 4),
+    ]
+    cases = [
+        (spark.createDataFrame(rows, ["key", "doc_id"]), ["key"], "doc_id", 1 + 6),
+        (spark.createDataFrame(banded, ["band", "key", "doc_id"]),
+         ["band", "key"], "doc_id", 3 + 1 + 1),
+        (spark.createDataFrame(banded, ["band", "bkey", "vec_id"]),
+         ["band", "bkey"], "vec_id", 3 + 1 + 1),
+    ]
+    for df, keys, id_col, n_pairs in cases:
+        got = dedup.bucket_pairs(df, keys, id_col=id_col)
+        assert got.columns == ["doc_a", "doc_b"]
+        a = sorted(map(tuple, _self_join_pairs(df, keys, id_col).collect()))
+        b = sorted(map(tuple, got.collect()))
+        assert a == b and len(a) == n_pairs, (keys, id_col)

@@ -67,7 +67,7 @@ def main() -> None:
         "ann_ivf_topk (centroid cell probe)": similarity.ann_ivf_topk(spark, sf_dir),
         "ann_ivf_scaled_topk (sqrt(n) cells)": similarity.ann_ivf_scaled_topk(spark, sf_dir),
         "ann_lsh_topk (banded sign-LSH)": similarity.ann_lsh_topk(spark, sf_dir),
-        "simhash_neardup_pairs (16-bit banded Hamming)": dedup.simhash_neardup_pairs(spark, sf_dir),
+        "simhash_neardup_pairs (width-64 banded Hamming, bucket pairs)": dedup.simhash_neardup_pairs(spark, sf_dir),
         "ngram_jaccard_pairs (stop-shingle anti-join + bucket pairs)": dedup.ngram_jaccard_pairs(spark, sf_dir),
         "q_events_within_hour (bucketed containment join)": relational.q_events_within_hour(spark, sf_dir),
         "q17_small_qty_revenue (decorrelated scalar subquery)": relational.q17_small_qty_revenue(spark, sf_dir),
@@ -79,22 +79,22 @@ def main() -> None:
     preamble = """
 ## Bucket cardinality as a function of corpus size (r5)
 
-Every near-dup/ANN candidate join is an equi-join on a bucket key; the
-within-bucket work is quadratic in bucket occupancy, so key entropy is the
-scale contract. Where each path stands at corpus size n:
+Every near-dup/ANN candidate set is keyed on a bucket key (near-dup paths:
+`dedup.bucket_pairs`; ANN: query-vs-candidate equi-join); the within-bucket
+work is quadratic in bucket occupancy, so key entropy is the scale
+contract. Where each path stands at corpus size n:
 
 | path | bucket key | distinct keys | occupancy at n |
 |---|---|---|---|
 | minhash_lsh_pairs | raw 3-long signature slice per band, 85 bands (r6: no md5 — array group key, same equality classes; r5: 256-permutation budget steepens the derived S-curve to r=3/b=85) | ~min(n, 2^180) (signature triple) | ~1 per identical-pair group; candidate volume ~ n^2 * P(J) with P(0.025)~1.3e-3 (12x down vs r4) |
-| simhash_neardup_pairs | 16-bit band value x 4 bands | 2^16 per band (r2: 2^8) | n / 65536 per band |
-| simhash_neardup_pairs_wide | 16-bit band value x (width/16) bands, width in {96,128} (r4, pytest-pinned) | 2^16 per band | n / 65536 per band, more bands = bigger Hamming budget |
+| simhash_neardup_pairs(_wide) | 16-bit band value x (width/16) bands; one path, 64-bit query = width 64 (4 bands), `_w96` = width 96 (6 bands) | 2^16 per band (r2: 2^8) | n / 65536 per band, more bands = bigger Hamming budget |
 | ann_lsh_topk / embedding_cosine_neardup | sign pattern of b dims per band | 2^b, b = _sign_band_bits(n) in [8,16] | ~SIGN_BUCKET_TARGET by construction |
 | ann_ivf_topk | per-label centroid cell | label cardinality (fixed twin) | n / labels |
 | ann_ivf_scaled_topk | sign prefix, ceil(log2(sqrt(n))) bits | ~sqrt(n) | ~sqrt(n) |
 | exact dedup / streaming dedup | full content fingerprint (md5) | ~n | ~1 + duplicate multiplicity |
 
-Raising scale further: SimHash widens to 96/128-bit signatures
-(`simhash_*_wide`, tested at 96); sign-LSH raises SIGN_BAND_BITS_MAX with
+Raising scale further: SimHash widens from 64 to 96/128-bit signatures
+(`simhash_*_wide(width)`, tested at 64 and 96); sign-LSH raises SIGN_BAND_BITS_MAX with
 embedding dim; IVF tracks sqrt(n) automatically. Corpus counts for index
 sizing come from parquet footer metadata (`_corpus_count`), not scans.
 
@@ -110,9 +110,10 @@ whole verify lineage) and folds the CC convergence count into the jump
 pass (one job per round).
 
 r6 (OPTIMIZATION_r06.md; plans/r06/ holds the before/after evidence):
-shared-key pair generation (LSH candidates AND ngram shared counts) is one
+shared-key pair generation (LSH candidates, ngram shared counts, SimHash
+bands and embedding sign-LSH bands) is one primitive, `dedup.bucket_pairs`:
 groupBy(bucket key) + array_sort(collect_list) + combination explode — the
-banded/shingle stream crosses the network ONCE, not twice as in the former
+keyed stream crosses the network ONCE, not twice as in the former
 self-join; the band key is the raw 3-long signature slice (array equi-join,
 no md5). lsh_verified_pairs filters candidates through a TWO-stage sketch
 cascade (8-bit compressed components over all ~9.25M candidate rows — a
@@ -120,8 +121,8 @@ provable superset filter at 1/8 the attached bytes — then the exact 60-bit
 count on its ~36k-row output) and re-shingles ONLY surviving docs behind a
 broadcast LeftSemi join instead of re-shuffling the full corpus stream.
 doc_top_terms derives df from a term-window over the single tf frame (one
-token explode, was two). The extraction stage emits spans as raw positional
-tuples (no per-span dict).
+token explode, was two). The extraction stage builds spans once per Arrow
+batch as a ListArray from flat int32 buffers (no per-span dict).
 """
 
     out = [

@@ -292,10 +292,6 @@ def minhash_signatures_sql() -> str:
     )
 
 
-def _lsh_candidates(ex: DataFrame) -> DataFrame:
-    return _lsh_candidates_from_sigs(_packed_sigs(ex))
-
-
 def _packed_sigs(ex: DataFrame) -> DataFrame:
     """(doc_id, sigs array<long>[K]) — the wide aggregate packed into ONE
     array column and lineage-truncated.
@@ -326,58 +322,32 @@ def _packed_sigs(ex: DataFrame) -> DataFrame:
     ).localCheckpoint()
 
 
-def _lsh_candidates_from_sigs(sigs: DataFrame, distinct: bool = True) -> DataFrame:
-    """LSH banding over packed signatures (doc_id, sigs array): docs
-    sharing any band key are candidate near-dups. The join key is the band
-    hash — never an all-pairs cross join. Callers that also need the
-    signatures elsewhere (the verify cascade) pass the same
-    ``_packed_sigs`` frame so the one wide aggregate runs once.
+def bucket_pairs(df: DataFrame, keys: list, id_col: str = "doc_id") -> DataFrame:
+    """(doc_a, doc_b) for every two ids of ``df`` that share the ``keys``
+    columns: one row per shared key with doc_a < doc_b — the same multiset
+    the keyed self-join ``l.keys = r.keys AND l.id < r.id`` emits. The one
+    pair generator behind every shared-key similarity join (LSH bands,
+    shared shingles, SimHash bands, sign-LSH bands).
 
-    ``distinct`` (r6): a pair sharing several bands appears once per band;
-    the declared candidate-pair output needs the dedup, but the verify
-    cascade filters each copy identically and dedups AFTER its sketch
-    filter — on ~36k rows instead of ~9.25M at sf1.0 — so it passes
-    distinct=False here."""
-    # bands fan out via ONE explode(transform(...)) expression over the
-    # array (NOT 85 per-band structs, whose plan analysis dominated wall
-    # time; NOT a union of re-derived frames, which would recompute the
-    # shingle aggregation per band). Band membership is slice b*R+1..+R =
-    # sig_{bR}..sig_{bR+R-1} — identical grouping to the oracle CTE.
-    #
-    # r6: the band key is the raw 3-long slice itself, joined as an array
-    # column — equality of slices is EXACTLY the equality the oracle's
-    # md5(concat) key encodes (md5 is injective on these inputs in
-    # practice; '|'-separated decimal renderings collide iff the slices
-    # are equal), so candidate pairs are identical while the n·85 md5
-    # string computations and the string-key shuffle bytes disappear.
-    bands = F.transform(
-        F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
-        lambda b: F.struct(
-            b.alias("band"),
-            F.slice(F.col("sigs"), b * LSH_ROWS + 1, LSH_ROWS).alias("band_key"),
-        ),
-    )
-    banded = sigs.select("doc_id", F.explode(bands).alias("bk")).select(
-        "doc_id", "bk.band", "bk.band_key"
-    )
-    # r6: pairs come from ONE groupBy over (band, band_key) + per-bucket
-    # combination generation, not a self-join — the banded stream crosses
-    # the network once instead of twice (measured 6.9s -> 2.9s at sf1.0).
-    # array_sort makes the bucket's id list strictly increasing, so emitting
-    # (ids[i-1], x) for x in ids[i+1:] reproduces the join's doc_a < doc_b
-    # pairs exactly, one row per shared band — same multiset as the
-    # self-join emitted. Every lambda sub-expression is O(1) over plain
-    # column refs (size/get on the materialized ids array — nothing
-    # re-evaluated per element). A pathological all-identical mega-bucket
-    # concentrates on one task either way (the join keyed the same bucket
-    # to one partition too); its quadratic OUTPUT, not this plan, is the
-    # scale limit, and the sub-threshold S-curve keeps buckets small.
+    Ids MUST be unique within a key (one row per (key, id)): a repeated id
+    would emit a (x, x) pair the self-join's strict ``<`` never does.
+
+    r6: ONE groupBy over the keys + per-bucket combination generation, not
+    a self-join — the keyed stream crosses the network once instead of
+    twice (measured 6.9 s -> 2.9 s for the LSH bands at sf1.0). array_sort
+    makes the bucket's id list strictly increasing, so emitting
+    (ids[i-1], x) for x in ids[i+1:] reproduces the join's doc_a < doc_b
+    pairs exactly. Every lambda sub-expression is O(1) over plain column
+    refs (size/get on the materialized ids array — nothing re-evaluated
+    per element). A pathological all-identical mega-bucket concentrates on
+    one task either way (the join keyed the same bucket to one partition
+    too); its quadratic OUTPUT, not this plan, is the scale limit."""
     buckets = (
-        banded.groupBy("band", "band_key")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+        df.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
-    pairs = buckets.select(
+    return buckets.select(
         F.explode(
             F.flatten(
                 F.transform(
@@ -393,12 +363,50 @@ def _lsh_candidates_from_sigs(sigs: DataFrame, distinct: bool = True) -> DataFra
             )
         ).alias("p")
     ).select("p.doc_a", "p.doc_b")
+
+
+def _lsh_candidates_from_sigs(sigs: DataFrame, distinct: bool = True) -> DataFrame:
+    """LSH banding over packed signatures (doc_id, sigs array): docs
+    sharing any band key are candidate near-dups (bucket_pairs over
+    (band, band_key)) — never an all-pairs cross join. Callers that also need the
+    signatures elsewhere (the verify cascade) pass the same
+    ``_packed_sigs`` frame so the one wide aggregate runs once.
+
+    ``distinct`` (r6): a pair sharing several bands appears once per band;
+    the declared candidate-pair output needs the dedup, but the verify
+    cascade filters each copy identically and dedups AFTER its sketch
+    filter — on ~36k rows instead of ~9.25M at sf1.0 — so it passes
+    distinct=False here."""
+    # bands fan out via ONE explode(transform(...)) expression over the
+    # array (NOT 85 per-band structs, whose plan analysis dominated wall
+    # time; NOT a union of re-derived frames, which would recompute the
+    # shingle aggregation per band). Band membership is slice b*R+1..+R =
+    # sig_{bR}..sig_{bR+R-1} — identical grouping to the oracle CTE.
+    #
+    # r6: the band key is the raw 3-long slice itself, grouped as an array
+    # column — equality of slices is EXACTLY the equality the oracle's
+    # md5(concat) key encodes (md5 is injective on these inputs in
+    # practice; '|'-separated decimal renderings collide iff the slices
+    # are equal), so candidate pairs are identical while the n·85 md5
+    # string computations and the string-key shuffle bytes disappear.
+    bands = F.transform(
+        F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
+        lambda b: F.struct(
+            b.alias("band"),
+            F.slice(F.col("sigs"), b * LSH_ROWS + 1, LSH_ROWS).alias("band_key"),
+        ),
+    )
+    banded = sigs.select("doc_id", F.explode(bands).alias("bk")).select(
+        "doc_id", "bk.band", "bk.band_key"
+    )
+    # the sub-threshold S-curve keeps band buckets small
+    pairs = bucket_pairs(banded, ["band", "band_key"])
     return pairs.distinct() if distinct else pairs
 
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _lsh_candidates(
-        _exploded_shingles(spark, sf_dir, distinct=False)
+    return _lsh_candidates_from_sigs(
+        _packed_sigs(_exploded_shingles(spark, sf_dir, distinct=False))
     ).orderBy("doc_a", "doc_b")
 
 
@@ -455,33 +463,10 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ex = ex_all.join(frequent, "shingle", "left_anti").persist()
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    # r6: shared counts via ONE groupBy(shingle) + per-bucket combination
-    # explode instead of the shingle self-join — the discriminative-shingle
-    # stream crosses the network once, not twice (same rewrite as the LSH
-    # candidate generation; per-bucket emission is bounded by the df ≤ 64
-    # stop-shingle cutoff, so a bucket emits ≤ C(64,2) pairs). array_sort
-    # reproduces the join's doc_a < doc_b convention exactly.
-    buckets = (
-        ex.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    pair_rows = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ids") - 1),
-                    lambda i: F.transform(
-                        F.slice(F.col("ids"), i + 1, F.size("ids")),
-                        lambda x: F.struct(
-                            F.get(F.col("ids"), i - 1).alias("doc_a"),
-                            x.alias("doc_b"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.doc_a", "p.doc_b")
+    # shared counts from the shingle buckets (bucket_pairs); per-bucket
+    # emission is bounded by the df ≤ 64 stop-shingle cutoff, so a bucket
+    # emits ≤ C(64,2) pairs
+    pair_rows = bucket_pairs(ex, ["shingle"])
     shared = pair_rows.groupBy("doc_a", "doc_b").agg(
         F.count(F.lit(1)).alias("shared")
     )
@@ -784,158 +769,26 @@ NEARDUP_CLUSTERS_SQL = (
     "FROM reach GROUP BY doc_id ORDER BY doc_id"
 )
 
-SIMHASH_BITS = 64  # carried as two 32-bit halves (sim_hi, sim_lo): a single
-# 64-bit value would overflow signed BIGINT at bit 63 on both engines
+# ---------------------------------------------------------------- SimHash --
+# One width-parameterized pipeline: the signature is width/32 BIGINT-safe
+# 32-bit halves sim_0 (least-significant) .. sim_{n-1} (a single 64-bit
+# value would overflow signed BIGINT at bit 63 on both engines), banded
+# into width/16 bands of 16 bits with Hamming budget bands-1 by pigeonhole.
+# One md5 per shingle covers up to four halves (128 bits). The 64-bit
+# queries (simhash_signatures / simhash_neardup_pairs) are width=64; wider
+# signatures (96/128) are the corpus-size lever past ~10^9 docs.
 _HALF = 32
-_HEX = "0123456789abcdef"
-
-
-def _h32_sql_duckdb(col: str, start: int = 1) -> str:
-    """8 hex chars of md5 starting at ``start`` (1-based) as an integer —
-    nibble arithmetic (DuckDB has no hex→int conversion)."""
-    terms = [
-        f"(strpos('{_HEX}', md5({col})[{start + i}:{start + i}]) - 1)"
-        f" * {16 ** (7 - i)}"
-        for i in range(8)
-    ]
-    return "(" + " + ".join(terms) + ")"
 
 
 def _h32_sql_spark(col: str, start: int = 1) -> str:
     return f"CAST(conv(substring(md5({col}), {start}, 8), 16, 10) AS BIGINT)"
 
 
-def _simhash_select(h_lo: str, h_hi: str) -> str:
-    """Bit-vote aggregation for the 64-bit SimHash: one wide map-side-
-    combined aggregate of 64 sums, portable FLOOR/% arithmetic on both
-    engines, recombined into two BIGINT-safe 32-bit halves."""
-    sums = ",\n         ".join(
-        f"SUM(CASE WHEN CAST(FLOOR(h_{half} / {2 ** j}) AS BIGINT) % 2 = 1 "
-        f"THEN 1 ELSE -1 END) AS s_{half}_{j}"
-        for half in ("lo", "hi")
-        for j in range(_HALF)
-    )
-
-    def recombine(half: str) -> str:
-        return " + ".join(
-            f"(CASE WHEN s_{half}_{j} >= 0 THEN {2 ** j} ELSE 0 END)"
-            for j in range(_HALF)
-        )
-
-    return (
-        f"WITH hashed AS (\n"
-        f"  SELECT doc_id, {h_lo} AS h_lo, {h_hi} AS h_hi FROM shingled\n"
-        f"),\n"
-        f"votes AS (\n"
-        f"  SELECT doc_id,\n         {sums}\n  FROM hashed GROUP BY doc_id\n"
-        f")\n"
-        f"SELECT doc_id, CAST({recombine('hi')} AS BIGINT) AS sim_hi,\n"
-        f"       CAST({recombine('lo')} AS BIGINT) AS sim_lo\n"
-        f"FROM votes ORDER BY doc_id"
-    )
-
-
-def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash per doc over word-2gram shingles: per-bit majority
-    vote of shingle hashes (near-dup docs land at small Hamming distance).
-    One shuffle (groupBy doc_id); the 64 bit-votes are one wide map-side-
-    combined aggregate, not 64 passes. 64 bits (vs the r2 32) is what makes
-    the banded join below corpus-scale: band keys draw from 2^16 values,
-    not 2^8."""
-    ex = _exploded_shingles(spark, sf_dir)
-    ex.createOrReplaceTempView("shingled")
-    return spark.sql(
-        _simhash_select(_h32_sql_spark("shingle", 1), _h32_sql_spark("shingle", 9))
-    )
-
-
-def simhash_signatures_sql() -> str:
-    return (
-        f"WITH shingled AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),\n"
-        + _simhash_select(
-            _h32_sql_duckdb("shingle", 1), _h32_sql_duckdb("shingle", 9)
-        )[5:]  # strip 'WITH '
-    )
-
-
-SIMHASH_BANDS = 4  # 4 × 16-bit bands over the 64-bit signature
-SIMHASH_HAMMING_MAX = 3  # ≤3 flipped bits leave ≥1 of 4 bands untouched
-
-# Engine-portable band keys (FLOOR/% instead of shifts — DuckDB and Spark
-# SQL share the syntax; halves are < 2^32 so the double division is exact).
-_SIMHASH_BAND_EXPRS = (
-    "sim_lo % 65536",
-    "CAST(FLOOR(sim_lo / 65536) AS BIGINT)",
-    "sim_hi % 65536",
-    "CAST(FLOOR(sim_hi / 65536) AS BIGINT)",
-)
-
-
-def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ 3.
-
-    Scale shape: candidates come from a 16-bit band-key equi-join (a pair
-    differing in ≤3 of 64 bits MUST agree on one of the 4 bands — exact
-    recall by pigeonhole, never all-pairs); the popcount verify runs only
-    on candidates. The banded-Hamming trick is the standard large-scale
-    simhash dedup plan (Manku et al., WWW'07 — public literature). Band
-    keys draw from 2^16 values per band (the r2 8-bit keys capped at 256
-    buckets ⇒ ~n²/256 candidate pairs at corpus scale); for corpora where
-    n/2^16 per-bucket is still too hot, widen the signature to 96/128 bits
-    (three/four halves) and keep bands at signature_bits/4 — the same
-    arithmetic extends."""
-    sigs = simhash_signatures(spark, sf_dir)
-    band_structs = [
-        F.struct(F.lit(j).alias("band"), F.expr(expr).alias("bv"))
-        for j, expr in enumerate(_SIMHASH_BAND_EXPRS)
-    ]
-    banded = (
-        sigs.select(
-            "doc_id", "sim_hi", "sim_lo",
-            F.explode(F.array(*band_structs)).alias("bk"),
-        )
-        .select("doc_id", "sim_hi", "sim_lo", "bk.band", "bk.bv")
-        .persist()
-    )
-    a = banded.select(
-        F.col("doc_id").alias("doc_a"), F.col("sim_hi").alias("ha_hi"),
-        F.col("sim_lo").alias("ha_lo"), "band", "bv",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("doc_b"), F.col("sim_hi").alias("hb_hi"),
-        F.col("sim_lo").alias("hb_lo"), "band", "bv",
-    )
-    return (
-        a.join(b, ["band", "bv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "ha_hi", "ha_lo", "hb_hi", "hb_lo")
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.expr(
-                "CAST(bit_count(ha_hi ^ hb_hi) + bit_count(ha_lo ^ hb_lo)"
-                " AS BIGINT)"
-            ),
-        )
-        .filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
-        .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
-    )
-
-
-# ------------------------------------------- width-parameterized SimHash --
-# The 64-bit pipeline above is the driver-gated default; these widen the
-# signature to 96/128 bits (three/four 32-bit halves, bands = width/16,
-# Hamming budget = bands-1 by pigeonhole) for corpora beyond ~10^9 docs —
-# the r3 verdict asked for the documented extension to be a TESTED
-# parameter, not a promise. One md5 per shingle still suffices: its 128
-# bits cover four 32-bit halves.
-
-
 def _simhash_select_wide(h_exprs: list) -> str:
-    """Bit-vote SQL for ``len(h_exprs)`` 32-bit halves; output columns
-    sim_0 (least-significant half) .. sim_{n-1}. Same portable FLOOR/%
-    arithmetic as the 64-bit _simhash_select."""
+    """Bit-vote SQL for ``len(h_exprs)`` 32-bit halves: one wide map-side-
+    combined aggregate of 32 sums per half in portable FLOOR/% arithmetic
+    (both engines), recombined into output columns sim_0 (least-significant
+    half) .. sim_{n-1}. A bit whose vote ties counts as 1."""
     n = len(h_exprs)
     hashed_cols = ", ".join(f"{e} AS h_{i}" for i, e in enumerate(h_exprs))
     sums = ",\n         ".join(
@@ -965,10 +818,11 @@ def _simhash_select_wide(h_exprs: list) -> str:
 def simhash_signatures_wide(
     spark: SparkSession, sf_dir: str, width: int = 96
 ) -> DataFrame:
-    """Width-parameterized SimHash signature (width in {32, 64, 96, 128},
-    i.e. up to the 128 bits one md5 provides): columns sim_0..sim_{w/32-1},
-    least-significant half first. width=64 reproduces simhash_signatures
-    exactly as (sim_0, sim_1) == (sim_lo, sim_hi) — pinned by pytest."""
+    """SimHash signature per doc over word-2gram shingles: per-bit majority
+    vote of shingle hashes (near-dup docs land at small Hamming distance),
+    width in {32, 64, 96, 128}. One shuffle (groupBy doc_id); the bit votes
+    are one wide map-side-combined aggregate, not ``width`` passes. Columns
+    sim_0..sim_{w/32-1}, least-significant half first."""
     assert width % _HALF == 0 and 0 < width <= 128
     n = width // _HALF
     ex = _exploded_shingles(spark, sf_dir)
@@ -979,8 +833,7 @@ def simhash_signatures_wide(
 
 def simhash_signatures_wide_sql(width: int = 96) -> str:
     """DuckDB twin of simhash_signatures_wide — same _simhash_select_wide
-    text over nibble-arithmetic halves, so the driver gate covers the wide
-    family end-to-end, not just pytest."""
+    text over nibble-arithmetic halves."""
     n = width // _HALF
     exprs = [_hex_int_sql_duckdb(1 + 8 * i, 8) for i in range(n)]
     return (
@@ -989,60 +842,69 @@ def simhash_signatures_wide_sql(width: int = 96) -> str:
     )
 
 
+def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """64-bit SimHash per doc as (sim_hi, sim_lo): the width=64 signature.
+    64 bits (vs the r2 32) is what makes the banded join corpus-scale: band
+    keys draw from 2^16 values, not 2^8."""
+    return simhash_signatures_wide(spark, sf_dir, 64).select(
+        "doc_id", F.col("sim_1").alias("sim_hi"), F.col("sim_0").alias("sim_lo")
+    )
+
+
+def simhash_signatures_sql() -> str:
+    return (
+        "SELECT doc_id, sim_1 AS sim_hi, sim_0 AS sim_lo\n"
+        f"FROM ({simhash_signatures_wide_sql(64)})\nORDER BY doc_id"
+    )
+
+
 def simhash_neardup_pairs_wide(
     spark: SparkSession, sf_dir: str, width: int = 96,
     hamming_max: int | None = None,
 ) -> DataFrame:
-    """Banded-Hamming near-dup pairs at any signature width: width/16 bands
-    of 16 bits (2 per half), so by pigeonhole every pair within
-    ``hamming_max = bands-1`` (default) flipped bits shares >= 1 untouched
-    band — exact recall, never all-pairs, same Manku-style plan as the
-    64-bit path. Per-band bucket entropy stays 2^16; widening the signature
-    multiplies the band count (more candidate tables, same occupancy),
-    which is the corpus-size lever past ~10^9 docs."""
+    """Near-dup pairs by SimHash Hamming distance ≤ ``hamming_max``.
+
+    Scale shape: width/16 bands of 16 bits (2 per half); candidates are
+    docs sharing a band value (bucket_pairs), so by pigeonhole every pair
+    within the default ``hamming_max = bands-1`` flipped bits shares >= 1
+    untouched band — exact recall, never all-pairs; the popcount verify
+    runs only on candidates. The banded-Hamming trick is the standard
+    large-scale simhash dedup plan (Manku et al., WWW'07 — public
+    literature). Per-band bucket entropy stays 2^16 (the r2 8-bit keys
+    capped at 256 buckets ⇒ ~n²/256 candidate pairs at corpus scale);
+    widening the signature multiplies the band count (more candidate
+    tables, same occupancy)."""
     n = width // _HALF
-    n_bands = 2 * n
     if hamming_max is None:
-        hamming_max = n_bands - 1
-    sigs = simhash_signatures_wide(spark, sf_dir, width)
+        hamming_max = 2 * n - 1
     sim_cols = [f"sim_{i}" for i in range(n)]
-    band_structs = []
-    for i in range(n):
-        band_structs.append(
-            F.struct(
-                F.lit(2 * i).alias("band"),
-                F.expr(f"sim_{i} % 65536").alias("bv"),
-            )
+    # localCheckpoint: the signatures feed the banding AND both Hamming
+    # sides — without the barrier the bit-vote aggregate runs three times
+    sigs = simhash_signatures_wide(spark, sf_dir, width).localCheckpoint()
+    # FLOOR/% instead of shifts, as in the oracle: halves are < 2^32, so the
+    # double division is exact
+    band_structs = [
+        F.struct(F.lit(2 * i + k).alias("band"), F.expr(bv).alias("bv"))
+        for i in range(n)
+        for k, bv in enumerate(
+            (f"sim_{i} % 65536", f"CAST(FLOOR(sim_{i} / 65536) AS BIGINT)")
         )
-        band_structs.append(
-            F.struct(
-                F.lit(2 * i + 1).alias("band"),
-                F.expr(f"CAST(FLOOR(sim_{i} / 65536) AS BIGINT)").alias("bv"),
-            )
-        )
-    banded = (
-        sigs.select("doc_id", *sim_cols, F.explode(F.array(*band_structs)).alias("bk"))
-        .select("doc_id", *sim_cols, "bk.band", "bk.bv")
-        .persist()
+    ]
+    banded = sigs.select(
+        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
+    ).select("doc_id", "bk.band", "bk.bv")
+    a = sigs.select(
+        F.col("doc_id").alias("doc_a"), *[F.col(c).alias(f"a_{c}") for c in sim_cols]
     )
-    a = banded.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(c).alias(f"a_{c}") for c in sim_cols],
-        "band", "bv",
+    b = sigs.select(
+        F.col("doc_id").alias("doc_b"), *[F.col(c).alias(f"b_{c}") for c in sim_cols]
     )
-    b = banded.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(c).alias(f"b_{c}") for c in sim_cols],
-        "band", "bv",
-    )
-    ham = " + ".join(
-        f"bit_count(a_sim_{i} ^ b_sim_{i})" for i in range(n)
-    )
+    ham = " + ".join(f"bit_count(a_sim_{i} ^ b_sim_{i})" for i in range(n))
     return (
-        a.join(b, ["band", "bv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .drop("band", "bv")
+        bucket_pairs(banded, ["band", "bv"])
         .distinct()
+        .join(a, "doc_a")
+        .join(b, "doc_b")
         .withColumn("hamming", F.expr(f"CAST({ham} AS BIGINT)"))
         .filter(F.col("hamming") <= hamming_max)
         .select("doc_a", "doc_b", "hamming")
@@ -1053,11 +915,10 @@ def simhash_neardup_pairs_wide(
 def simhash_neardup_pairs_wide_sql(width: int = 96,
                                    hamming_max: int | None = None) -> str:
     """DuckDB twin of simhash_neardup_pairs_wide (same banding/budget
-    derivation), so the wide pairs path is driver-gated end-to-end."""
+    derivation)."""
     n = width // _HALF
-    n_bands = 2 * n
     if hamming_max is None:
-        hamming_max = n_bands - 1
+        hamming_max = 2 * n - 1
     sim_cols = ", ".join(f"sim_{i}" for i in range(n))
     band_rows = []
     for i in range(n):
@@ -1088,26 +949,11 @@ def simhash_neardup_pairs_wide_sql(width: int = 96,
     )
 
 
+def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pairs by 64-bit SimHash Hamming distance ≤ 3: the width=64
+    case of simhash_neardup_pairs_wide (4 bands of 16 bits)."""
+    return simhash_neardup_pairs_wide(spark, sf_dir, 64)
+
+
 def simhash_neardup_pairs_sql() -> str:
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, sim_hi, sim_lo, {j} AS band, {expr} AS bv FROM sh"
-        for j, expr in enumerate(_SIMHASH_BAND_EXPRS)
-    )
-    inner = _simhash_select(
-        _h32_sql_duckdb("shingle", 1), _h32_sql_duckdb("shingle", 9)
-    ).replace("ORDER BY doc_id", "")
-    # the full simhash query (own nested WITH) becomes the sh CTE body
-    ham = (
-        "bit_count(xor(a.sim_hi, b.sim_hi)) + bit_count(xor(a.sim_lo, b.sim_lo))"
-    )
-    return (
-        f"WITH shingled AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),\n"
-        f"sh AS ({inner}),\n"
-        f"banded AS ({bands})\n"
-        "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,\n"
-        f"       CAST({ham} AS BIGINT) AS hamming\n"
-        "FROM banded a JOIN banded b\n"
-        "  ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id\n"
-        f"WHERE {ham} <= {SIMHASH_HAMMING_MAX}\n"
-        "ORDER BY doc_a, doc_b"
-    )
+    return simhash_neardup_pairs_wide_sql(64)

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from univer_ocr_spark.ops.dedup import bucket_pairs
+
 N_QUERIES = 10  # vec_id < 10 are queries; the rest are candidates
 TOP_K = 5
 LSH_TOP_K = 3
@@ -571,12 +573,13 @@ def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for any natural pair in this corpus, measured), the detector must find
     EXACTLY the planted pairs.
 
-    Scale path: candidates come from the banded sign-LSH equi-join (a
-    planted pair differs only in the last dimension, so it matches on at
-    least SIGN_BANDS-1 untouched bands); exact cosine is computed only on
-    candidate pairs — never all-pairs. Per-band bucket occupancy is
-    n / 2^SIGN_BAND_BITS, so the within-bucket join stays sub-quadratic at
-    corpus scale (the r2 single 8-bit bucket capped at 256 buckets total).
+    Scale path: candidates are vectors sharing a sign-LSH band
+    (dedup.bucket_pairs; a planted pair differs only in the last dimension,
+    so it matches on at least SIGN_BANDS-1 untouched bands); exact cosine
+    is computed only on candidate pairs — never all-pairs. Per-band bucket
+    occupancy is n / 2^SIGN_BAND_BITS, so per-bucket pairs stay
+    sub-quadratic at corpus scale (the r2 single 8-bit bucket capped at 256
+    buckets total).
 
     The planted-twin id offset and the perturbed dimension are DERIVED from
     the dataset (max vec_id + 1; len(embedding)) on both engines, not
@@ -607,12 +610,8 @@ def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.explode(_sign_bands("v")).alias("bk")
     ).select("vec_id", "bk.band", "bk.bkey")
     cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band", "bkey"])
-        .filter(F.col("x.vec_id") < F.col("y.vec_id"))
-        .select(
-            F.col("x.vec_id").alias("id_a"), F.col("y.vec_id").alias("id_b")
-        )
+        bucket_pairs(banded, ["band", "bkey"], id_col="vec_id")
+        .select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
         .distinct()
     )
     a = alls.select(
