@@ -137,8 +137,8 @@ def _conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (including the mega-conversation) must be the only duplicates.
 
     Scale shape: one groupBy(conv_id) whose state is digest-sized (33
-    bytes/turn — a 10^5-turn mega-conv is ~3 MB, no salting needed, unlike
-    the payload-sized conv_stats aggregate), then one window over the
+    bytes/turn — a 10^5-turn mega-conv is ~3 MB, so one reducer holds
+    it without salting), then one window over the
     fingerprint. The oracle derives the SAME fingerprints from the golden
     parquet's text_md5 column, so this query doubles as another per-turn
     extraction-equality gate."""

@@ -60,7 +60,7 @@ def ensure_transcripts(spark, sf: float) -> tuple[str, int]:
     from univer_ocr_spark.generator.transcripts import transcripts_df
 
     n_turns_target = int(os.environ.get("SPARK_GRAFT_TURNS", int(1_000_000 * sf)))
-    # avg conv ≈ 11 turns; one mega-conv at ~5% of turns exercises salting
+    # avg conv ≈ 11 turns; one mega-conv at ~5% of turns skews conv_stats
     mega_size = max(200, n_turns_target // 20)
     n_convs = max(20, (n_turns_target - mega_size) // 11)
     path = f"/tmp/univer_bench_transcripts_{n_turns_target}_{_generator_fingerprint()}"
@@ -171,9 +171,10 @@ def main() -> None:
 
     def run_transcripts():
         df = spark.read.parquet(tr_path)
-        # no shuffle: the map stage balances via parquet splits (small row
-        # groups + 8 MB maxPartitionBytes). Skew salting is exercised by the
-        # conv_stats aggregate below, where it is actually needed.
+        # no shuffle: run_extraction merges the 8 MB parquet splits (small
+        # row groups + maxPartitionBytes) into byte-sized tasks, at least one
+        # per core. The mega-conversation's skew is bounded by the partial
+        # aggregation of conv_stats below.
         out = run_extraction(df, drop_payload=True)
         row = out.agg(
             F.count(F.lit(1)).alias("n"),
@@ -185,7 +186,7 @@ def main() -> None:
 
     def run_conv_stats():
         df = spark.read.parquet(tr_path)
-        out = conv_stats(run_extraction(df, drop_payload=True), n_salt=CPUS)
+        out = conv_stats(run_extraction(df, drop_payload=True))
         out.agg(F.sum("total_chars")).collect()
 
     # Adaptive settle (r4): a fresh Firecracker microVM backs guest pages

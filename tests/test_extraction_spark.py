@@ -6,10 +6,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from test_extract_docs_plan import _executed_plan
 from univer_ocr_spark.generator.transcripts import transcripts_df
 from univer_ocr_spark.spark.pipeline import (
     conv_stats,
     detect_skewed_convs,
+    extract_stage,
     run_extraction,
     with_salt,
 )
@@ -63,21 +65,54 @@ def test_skew_detection_and_salt(spark):
     ).count() == 0
 
 
+def test_default_path_merges_small_splits(spark, tmp_path):
+    """``partitions=None`` coalesces small scan splits to one task per core;
+    splits larger than the advisory partition size, and an explicit
+    ``partitions=N``, are kept."""
+    transcripts_df(spark, N_CONVS, **MEGA, partitions=8).write.parquet(str(tmp_path / "t"))
+    # 1 MB splits: one split per file, as in the benchmark's scan
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
+        df = spark.read.parquet(str(tmp_path / "t"))
+        n_splits = df.rdd.getNumPartitions()
+        assert n_splits >= 8
+
+        out = run_extraction(df)
+        assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism == 4
+        key = ["conv_id", "turn_idx"]
+        assert (out.drop("extraction_version").orderBy(key).collect()
+                == extract_stage(df).orderBy(key).collect())
+
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
+        assert run_extraction(df).rdd.getNumPartitions() == n_splits
+        spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+
+        assert run_extraction(df, partitions=6).rdd.getNumPartitions() == 6
+
+        # unknown statistics (Long.MaxValue for an RDD-backed frame) keep them too
+        unknown = spark.createDataFrame(df.rdd, df.schema)
+        assert run_extraction(unknown).rdd.getNumPartitions() == n_splits
+    finally:
+        for k in ("spark.sql.files.maxPartitionBytes",
+                  "spark.sql.adaptive.advisoryPartitionSizeInBytes"):
+            spark.conf.unset(k)
+
+
 def test_conv_stats_rollup(spark):
-    df = transcripts_df(spark, 8)
+    df = transcripts_df(spark, 8, **MEGA)
     out = run_extraction(df)
-    stats = conv_stats(out).orderBy("conv_id").collect()
+    stats = {r["conv_id"]: r for r in conv_stats(out).collect()}
     assert len(stats) == 8
-    # cross-check one conv against a direct ungrouped aggregate
-    direct = (
-        out.filter(F.col("conv_id") == stats[0]["conv_id"])
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_chars").alias("c"),
-            F.sum("n_spans").alias("s"),
-        )
-        .collect()[0]
-    )
-    assert stats[0]["n_turns"] == direct["n"]
-    assert stats[0]["total_chars"] == direct["c"]
-    assert stats[0]["total_spans"] == direct["s"]
+    assert stats["conv-00000000"]["n_turns"] == 250
+    # every conv against a direct aggregate of the extracted rows
+    direct = {}
+    for r in out.select("conv_id", "n_chars", "n_spans").collect():
+        n, c, s = direct.get(r["conv_id"], (0, 0, 0))
+        direct[r["conv_id"]] = (n + 1, c + r["n_chars"], s + r["n_spans"])
+    assert {k: (r["n_turns"], r["total_chars"], r["total_spans"])
+            for k, r in stats.items()} == direct
+    # one shuffle, with the partial (map-side) aggregate below it
+    plan = _executed_plan(conv_stats(run_extraction(df)))
+    assert plan.count("Exchange") == 1, plan
+    below = plan.split("Exchange", 1)[1]
+    assert "HashAggregate" in below and "partial_count" in below, plan

@@ -55,7 +55,7 @@ def main() -> None:
         "transcripts extraction (shuffle-free map)": run_extraction(
             transcripts_df(spark, 5, with_goldens=False)
         ),
-        "conv_stats (salted two-phase agg)": conv_stats(
+        "conv_stats (one groupBy, partial agg map-side)": conv_stats(
             run_extraction(transcripts_df(spark, 5, with_goldens=False))
         ),
         "q1_pricing_summary": relational.q1_pricing_summary(spark, sf_dir),

@@ -8,12 +8,16 @@ becomes DataFrame columns, the per-paragraph/line worker pools
 the nested text result becomes (extracted_text, spans) columns.
 
 Scale design (SURVEY.md X14 — the one thing the reference lacks):
-- extraction is row-local, so the only shuffle in the hot path is the single
-  optional ``repartition`` that right-sizes tasks;
-- per-conversation aggregates use two-phase (salted partial → final) plans so
-  a 10^4-turn mega-conversation cannot serialize one reducer;
+- extraction is row-local, so the hot path has no shuffle: by default
+  ``run_extraction`` only merges small scan splits (a narrow ``coalesce``)
+  into byte-sized tasks, because every Python task pays a fixed set-up
+  cost before it reads a row; ``partitions=N`` instead salts
+  mega-conversations and hash-repartitions (one shuffle);
+- per-conversation aggregates are one ``groupBy``: Spark's partial
+  aggregation sends a reducer one row per conversation per map task, so a
+  10^4-turn mega-conversation cannot serialize one reducer;
 - output ordering is by (conv_id, turn_idx) *columns*, never partition
-  layout, so salting can't break the ordering contract.
+  layout, so neither merging nor salting can break the ordering contract.
 """
 
 from __future__ import annotations
@@ -147,6 +151,21 @@ def with_salt(df: DataFrame, skewed: List[str], n_salt: int = 16) -> DataFrame:
     )
 
 
+def _byte_sized_partitions(df: DataFrame) -> int:
+    """Task count for extracting ``df`` without a shuffle: one task per core,
+    or one per advisory partition size
+    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``, 64 MB by default)
+    of the optimized plan's size estimate if that is more."""
+    spark = df.sparkSession
+    advisory = spark._jsparkSession.sessionState().conf().getConf(
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES())
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    # unknown statistics read as Long.MaxValue; coalesce takes an int, and a
+    # count above the input's partition count keeps every partition anyway
+    return min(max(spark.sparkContext.defaultParallelism, -(-est // advisory)),
+               2**31 - 1)
+
+
 def run_extraction(
     df: DataFrame,
     partitions: int | None = None,
@@ -154,10 +173,17 @@ def run_extraction(
     n_salt: int = 16,
     drop_payload: bool = False,
 ) -> DataFrame:
-    """Full pipeline: (optional) skew-aware repartition → extraction stage.
+    """Full pipeline: task sizing → extraction stage.
 
-    ``partitions=None`` keeps the input partitioning (no shuffle at all —
-    the right call when the source is already well-partitioned parquet).
+    ``partitions=None`` does not shuffle. It merges input partitions with a
+    narrow ``coalesce`` down to ``max(cores, ceil(estimated bytes / advisory
+    partition size))`` tasks: each Python task pays a fixed set-up cost
+    before its first row, so small scan splits are merged while splits
+    already larger than the advisory size stay as they are.
+
+    ``partitions=N`` salts mega-conversations (more than ``salt_threshold``
+    turns over ``n_salt`` buckets), hash-repartitions on (conv_id, salt) to
+    N partitions and sorts each by (conv_id, turn_idx).
     """
     if partitions:
         skewed = detect_skewed_convs(df, salt_threshold)
@@ -171,26 +197,19 @@ def run_extraction(
             # can never break ordering
             .sortWithinPartitions("conv_id", "turn_idx")
         )
+    else:
+        df = df.coalesce(_byte_sized_partitions(df))
     out = extract_stage(df, drop_payload=drop_payload)
     return out.withColumn("extraction_version", F.lit(EXTRACTION_VERSION))
 
 
-def conv_stats(extracted: DataFrame, n_salt: int = 16) -> DataFrame:
-    """Per-conversation rollup with a skew-proof two-phase aggregate:
-    partial agg on (conv_id, salt) → final agg on conv_id. Functionally the
-    map-side combine Spark already does for sums — made explicit so a single
-    hot reducer key is impossible even with combiner-hostile aggregates."""
-    salted = extracted.withColumn("salt", F.pmod(F.col("turn_idx"), F.lit(n_salt)))
-    partial = salted.groupBy("conv_id", "salt").agg(
-        F.count(F.lit(1)).alias("p_turns"),
-        F.sum("n_chars").alias("p_chars"),
-        F.sum("n_spans").alias("p_spans"),
-    )
-    return (
-        partial.groupBy("conv_id")
-        .agg(
-            F.sum("p_turns").alias("n_turns"),
-            F.sum("p_chars").alias("total_chars"),
-            F.sum("p_spans").alias("total_spans"),
-        )
+def conv_stats(extracted: DataFrame) -> DataFrame:
+    """Per-conversation rollup: one ``groupBy("conv_id")``, one Exchange.
+    Spark's partial aggregation combines each map task's rows before the
+    shuffle, so a mega-conversation's reducer gets one row per map task,
+    not one per turn."""
+    return extracted.groupBy("conv_id").agg(
+        F.count(F.lit(1)).alias("n_turns"),
+        F.sum("n_chars").alias("total_chars"),
+        F.sum("n_spans").alias("total_spans"),
     )
