@@ -73,12 +73,8 @@ def _transcripts_full(spark: SparkSession):
     from univer_ocr_spark.generator.transcripts import transcripts_df
     from univer_ocr_spark.spark.pipeline import run_extraction
 
-    # persist: run_extraction's skew-detection pre-pass and the extraction
-    # job both consume this generator output — without the cache the full
-    # table is generated twice
-    df = transcripts_df(spark, N_CONVS, mega_conv_count=MEGA_COUNT,
-                        mega_conv_size=MEGA_SIZE, partitions=8).persist()
-    return run_extraction(df, partitions=8, salt_threshold=100, n_salt=4)
+    return run_extraction(transcripts_df(spark, N_CONVS, mega_conv_count=MEGA_COUNT,
+                                         mega_conv_size=MEGA_SIZE, partitions=8))
 
 
 def _extraction_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,7 +96,7 @@ def _extraction_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _transcripts_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: end-to-end generator → mapInPandas extraction, emitted as a
+    """Flagship: end-to-end generator → Arrow extraction stage, emitted as a
     per-turn digest (md5 of extracted text + canonical span string + counts).
     The DuckDB oracle reads the SAME digests from the materialized golden
     parquet (generator/goldens.py), so the driver's hash gate checks

@@ -1,19 +1,15 @@
 """Spark pipeline vs by-construction goldens — the north-rule correctness
 gate: per-turn text + span equality under stable (conv_id, turn_idx)
-ordering, including a salted mega-conversation."""
+ordering, including a 250-turn mega-conversation."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from test_extract_docs_plan import _executed_plan
 from univer_ocr_spark.generator.transcripts import transcripts_df
 from univer_ocr_spark.spark.pipeline import (
     conv_stats,
-    detect_skewed_convs,
     extract_stage,
     run_extraction,
-    with_salt,
 )
 
 N_CONVS = 40
@@ -33,7 +29,7 @@ def _assert_matches_golden(rows):
 
 def test_pipeline_matches_golden_per_turn(spark):
     df = transcripts_df(spark, N_CONVS, **MEGA, partitions=6)
-    out = run_extraction(df, partitions=6, salt_threshold=100, n_salt=4)
+    out = run_extraction(df)
     rows = out.orderBy("conv_id", "turn_idx").collect()
     _assert_matches_golden(rows)
     # mega-conv present and fully extracted
@@ -44,31 +40,15 @@ def test_pipeline_matches_golden_per_turn(spark):
 
 def test_deterministic_across_partitionings(spark):
     a = run_extraction(transcripts_df(spark, 12, partitions=2))
-    b = run_extraction(transcripts_df(spark, 12, partitions=7), partitions=3)
+    b = run_extraction(transcripts_df(spark, 12, partitions=7))
     ra = a.orderBy("conv_id", "turn_idx").collect()
     rb = b.orderBy("conv_id", "turn_idx").collect()
     assert [r.asDict() for r in ra] == [r.asDict() for r in rb]
 
 
-def test_skew_detection_and_salt(spark):
-    df = transcripts_df(spark, 10, **MEGA, with_goldens=False)
-    skewed = detect_skewed_convs(df, threshold=100)
-    assert skewed == ["conv-00000000"]
-    salted = with_salt(df, skewed, n_salt=4)
-    dist = (
-        salted.filter(F.col("conv_id") == "conv-00000000")
-        .groupBy("salt").count().collect()
-    )
-    assert len(dist) == 4  # mega-conv spread over all salt buckets
-    assert salted.filter(
-        (F.col("conv_id") != "conv-00000000") & (F.col("salt") != 0)
-    ).count() == 0
-
-
 def test_default_path_merges_small_splits(spark, tmp_path):
-    """``partitions=None`` coalesces small scan splits to one task per core;
-    splits larger than the advisory partition size, and an explicit
-    ``partitions=N``, are kept."""
+    """``run_extraction`` coalesces small scan splits to one task per core;
+    splits larger than the advisory partition size are kept."""
     transcripts_df(spark, N_CONVS, **MEGA, partitions=8).write.parquet(str(tmp_path / "t"))
     # 1 MB splits: one split per file, as in the benchmark's scan
     try:
@@ -86,8 +66,6 @@ def test_default_path_merges_small_splits(spark, tmp_path):
         spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
         assert run_extraction(df).rdd.getNumPartitions() == n_splits
         spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-
-        assert run_extraction(df, partitions=6).rdd.getNumPartitions() == 6
 
         # unknown statistics (Long.MaxValue for an RDD-backed frame) keep them too
         unknown = spark.createDataFrame(df.rdd, df.schema)

@@ -3,31 +3,44 @@ OVERLAPS a column line's band must still emit as its own block, with the
 band's column co-tenants re-attached to the region below — the r3
 documented degraded mode (band-level detection saw >= 2 x-runs, called the
 merged band non-spanning, and interleaved the title into the columns).
-Pure-Python: no Spark session needed."""
+The payload test also covers the other two spanning-title layouts of
+``ops/extract_docs`` (plain title, tall title). Pure-Python: no Spark
+session needed."""
 
 from __future__ import annotations
 
 from random import Random
 
+import pytest
+
 from univer_ocr_spark.extract.pdfish_batch import extract_pdfish_many
 from univer_ocr_spark.extract.pdfish_extract import extract_pdfish
 from univer_ocr_spark.generator.pdfish_gen import generate_pdfish
 from univer_ocr_spark.ops.extract_docs import (
+    _HEIGHTS_TITLE,
     _OVERLAP_TITLE,
+    _TITLE_WORDS,
+    _pdfish_heights_payload,
     _pdfish_overlap_payload,
+    _pdfish_title_payload,
 )
 from univer_ocr_spark.spans import validate_spans
 
 
-def test_overlap_payload_reading_order_and_batch_equality():
+@pytest.mark.parametrize("title, build", [
+    (_TITLE_WORDS, _pdfish_title_payload),
+    (_OVERLAP_TITLE, _pdfish_overlap_payload),
+    (_HEIGHTS_TITLE, _pdfish_heights_payload),
+], ids=["title", "overlap", "heights"])
+def test_overlap_payload_reading_order_and_batch_equality(title, build):
     text = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lam mu nu xi omicron pi rho sigma tau")
-    payload = _pdfish_overlap_payload(7, text)
+    payload = build(7, text)
     slow = extract_pdfish(payload)
     assert extract_pdfish_many([payload])[0] == slow
     words = text.split()
     # title first (its own unit), then column-major words, one per line
-    assert slow[0].split("\n") == [" ".join(_OVERLAP_TITLE)] + words
+    assert slow[0].split("\n") == [" ".join(title)] + words
     validate_spans(payload, slow[1])
 
 

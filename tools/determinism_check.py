@@ -26,7 +26,7 @@ cpus = int(sys.argv[1])
 spark = get_spark(master=f"local[{cpus}]", app_name=f"det_{cpus}")
 df = transcripts_df(spark, 40, mega_conv_count=1, mega_conv_size=300,
                     partitions=cpus)
-out = run_extraction(df, partitions=cpus, salt_threshold=100, n_salt=cpus)
+out = run_extraction(df)
 rows = (
     out.select("conv_id", "turn_idx", "extracted_text",
                F.col("spans").cast("string").alias("s"))

@@ -200,7 +200,7 @@ at {stamp}.
 
 North rule: extraction throughput scaling efficiency >= 0.8 from N to 4N
 executors. Evidenced in-sandbox as the same extraction job (same input
-parquet, {turns} transcript turns incl. one salted mega-conversation) at
+parquet, {turns} transcript turns incl. one mega-conversation) at
 `local[{n_low}]` vs `local[{n_high}]` on one host.
 
 Protocol (r5, reproducibility-hardened — see tools/scaling_bench.py):

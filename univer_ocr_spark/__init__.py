@@ -11,7 +11,7 @@ transcript turns instead of rendered pixels).
 
 Architecture is Spark-first: one turn = one row; all per-turn parsing runs
 inside one Arrow-batched ``mapInArrow`` stage per query; cross-turn structure
-(partitioning, salting, ordering, checkpoint/resume) is DataFrame-level.
+(task sizing, ordering, checkpoint/resume) is DataFrame-level.
 """
 
 EXTRACTION_VERSION = "1.1.0"  # r3: spanning-block column splitting + numeric char refs

@@ -10,8 +10,8 @@ or PYTHONHASHSEED. The Spark path (``mapInPandas`` over ``spark.range``) and
 the local pandas path produce byte-identical rows.
 
 Skew: conversation sizes are mostly 2-20 turns with a configurable number of
-mega-conversations (10^3-10^4 turns) to exercise salting — the skew the
-reference never handles (SURVEY.md X14).
+mega-conversations (10^3-10^4 turns) to exercise the skew the reference
+never handles (SURVEY.md X14).
 """
 
 from __future__ import annotations

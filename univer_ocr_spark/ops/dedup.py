@@ -441,6 +441,25 @@ def minhash_lsh_pairs_sql() -> str:
 MAX_SHINGLE_FREQ = 64  # stop-shingle cutoff: df > this carries no signal
 
 
+def _jaccard_pairs(shared: DataFrame, ex: DataFrame) -> DataFrame:
+    """Pairs ``(doc_a, doc_b, shared)`` whose Jaccard over the distinct
+    ``(doc_id, shingle)`` rows of ``ex``, rounded to 4 places, reaches
+    JACCARD_THRESHOLD; with both set sizes, ordered by (doc_a, doc_b)."""
+    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
+    return (
+        shared.join(sa, "doc_a").join(sb, "doc_b")
+        .withColumn(
+            "jaccard",
+            F.round(F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")), 4),
+        )
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", "shared", "na", "nb", "jaccard")
+        .orderBy("doc_a", "doc_b")
+    )
+
+
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram Jaccard similar pairs over *discriminative* shingles.
 
@@ -462,7 +481,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("shingle")
     )
     ex = ex_all.join(frequent, "shingle", "left_anti").persist()
-    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     # shared counts from the shingle buckets (bucket_pairs); per-bucket
     # emission is bounded by the df ≤ 64 stop-shingle cutoff, so a bucket
     # emits ≤ C(64,2) pairs
@@ -470,18 +488,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared = pair_rows.groupBy("doc_a", "doc_b").agg(
         F.count(F.lit(1)).alias("shared")
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
-    return (
-        shared.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")), 4),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "shared", "na", "nb", "jaccard")
-        .orderBy("doc_a", "doc_b")
-    )
+    return _jaccard_pairs(shared, ex)
 
 
 NGRAM_JACCARD_SQL = (
@@ -595,7 +602,6 @@ def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = ex.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = ex.select(F.col("doc_id").alias("doc_b"), "shingle")
     shared = (
@@ -604,18 +610,7 @@ def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
-    return (
-        shared.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")), 4),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "shared", "na", "nb", "jaccard")
-        .orderBy("doc_a", "doc_b")
-    )
+    return _jaccard_pairs(shared, ex)
 
 
 def _verified_cte_sql() -> str:

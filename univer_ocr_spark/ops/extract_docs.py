@@ -17,6 +17,7 @@ are laid out inside the extraction stage (``_glyph_pages``).
 from __future__ import annotations
 
 import re
+from functools import partial
 from random import Random
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -385,32 +386,31 @@ FROM documents WHERE length(trim(text)) > 0 ORDER BY doc_id
 """
 
 
-# fixed spanning title: one x-run from x=40, 44 glyphs + 5 word gaps =
-# 392 px >= ceil(3/5 * 612) = 368 (the integer spanning rule) and inside
-# the page; laid at y=85 (below the 10% top margin of 792, above the body)
-_TITLE_WORDS = ("document", "heading", "overview", "summary", "sections", "report")
+# Spanning-title pages: a fixed title row laid from x=40, then the doc's
+# words as one-word lines (narrow, so only the title is spanning), at most
+# 14 per column, one column per (x0, y0) origin. Correct extraction emits
+# the title first, then the words in column-major order — a column-unaware
+# reader would interleave the title into the columns.
 TITLE_MAX_WORDS = 28  # <= 2 columns of 14 one-word lines: page stays 612 wide
 
 
-def _pdfish_title_payload(doc_id: int, text: str) -> str:
-    """Two-column page (one word per line, 14 lines per column, columns at
-    x=40/330) UNDER a full-width spanning title. Column lines stay narrow
-    (single words) so only the title is spanning; correct extraction must
-    emit the title first, then the words in column-major order — a
-    column-unaware reader would interleave the title into the columns."""
+def _titled_page(title, title_y: int, title_ht: int, origins,
+                 doc_id: int, text: str) -> str:
+    """Glyph page for ``text`` under the spanning ``title`` (one row at
+    y=``title_y``, glyph height ``title_ht``; body glyphs are 10 high),
+    records shuffled deterministically by doc_id."""
     words = _ws_tokens(text)
     recs = []
     x = 40
-    for w in _TITLE_WORDS:
+    for w in title:
         for ch in w:
-            recs.append(f"g {ch} {x} 85 8 10")
+            recs.append(f"g {ch} {x} {title_y} 8 {title_ht}")
             x += 8
         x += 8
-    for c0 in range(0, len(words), 14):
-        x0 = 40 + (c0 // 14) * 290
+    for (x0, y0), c0 in zip(origins, range(0, len(words), 14)):
         for k, w in enumerate(words[c0 : c0 + 14]):
             x = x0
-            y = 120 + 20 * k
+            y = y0 + 20 * k
             for ch in w:
                 recs.append(f"g {ch} {x} {y} 8 10")
                 x += 8
@@ -418,18 +418,15 @@ def _pdfish_title_payload(doc_id: int, text: str) -> str:
     return "%PDFISH 612 792\n" + "\n".join(recs) + "\n"
 
 
-def extract_pdfish_title_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spanning-title reading order through the REAL extraction stage (the
-    r3 capability, driver-gated): expected flat text = the fixed title then
-    the doc's words in original order (column-major one-word lines restore
-    it by construction); n_units = 1 + word count. Docs are filtered to
-    <= TITLE_MAX_WORDS words on both engines so the page geometry is fixed
-    (two columns, page width 612 — the spanning threshold must not move
-    with content)."""
+def _titled_docs(spark: SparkSession, sf_dir: str, layout,
+                 max_word_len: int) -> DataFrame:
+    """Extraction of ``layout`` pages for docs of <= TITLE_MAX_WORDS words
+    of <= ``max_word_len`` chars (the filter fixes the page geometry: the
+    spanning threshold must not move with content); flat text and unit
+    count per doc."""
     d = _docs(spark, sf_dir)
     # count NONEMPTY tokens (leading non-space whitespace would otherwise
-    # produce a phantom '' token and shift the expected unit count) and cap
-    # word length at 32 chars (a longer word would bridge the fixed gutter)
+    # produce a phantom '' token and shift the expected unit count)
     toks = F.filter(
         F.split(F.trim(F.lower("text")), WS_CLASS + "+"),
         lambda x: x != "",
@@ -437,9 +434,9 @@ def extract_pdfish_title_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = d.filter(
         (F.length(F.trim("text")) > 0)
         & (F.size(toks) <= TITLE_MAX_WORDS)
-        & (F.size(F.filter(toks, lambda x: F.length(x) > 32)) == 0)
+        & (F.size(F.filter(toks, lambda x: F.length(x) > max_word_len)) == 0)
     )
-    out = _glyph_pages(d, _pdfish_title_payload)
+    out = _glyph_pages(d, layout)
     return out.select(
         "doc_id",
         F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
@@ -449,58 +446,65 @@ def extract_pdfish_title_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-EXTRACT_PDFISH_TITLE_SQL = f"""
+def _titled_sql(title, max_word_len: int) -> str:
+    """DuckDB twin of ``_titled_docs``: the title then the doc's
+    whitespace-normalized words; n_units = 1 + word count."""
+    return f"""
 WITH toks AS (
   SELECT doc_id, text,
          list_filter(regexp_split_to_array(trim(lower(text)), '{WS_CLASS}+'),
                      t -> t <> '') AS ts
   FROM documents WHERE length(trim(text)) > 0)
 SELECT doc_id,
-       '{" ".join(_TITLE_WORDS)} ' || trim(regexp_replace(text, '{WS_CLASS}+', ' ', 'g'))
+       '{" ".join(title)} ' || trim(regexp_replace(text, '{WS_CLASS}+', ' ', 'g'))
          AS extracted_flat,
        CAST(1 + len(ts) AS BIGINT) AS n_units
 FROM toks
 WHERE len(ts) <= {TITLE_MAX_WORDS}
-  AND len(list_filter(ts, t -> length(t) > 32)) = 0
+  AND len(list_filter(ts, t -> length(t) > {max_word_len})) = 0
 ORDER BY doc_id
 """
 
 
-# fixed overlap-variant title: ten 4-char words from x=40 -> extent
-# 10*40 - 8 = 392 px >= ceil(3/5 * 612) = 368 (spanning) with x_end = 432,
-# >= one column gap away from column 2 at x=500
+# fixed spanning title: one x-run from x=40, 44 glyphs + 5 word gaps =
+# 392 px >= ceil(3/5 * 612) = 368 (the integer spanning rule) and inside
+# the page; laid at y=85 (below the 10% top margin of 792, above the body).
+# Columns at x=40/330, both from y=120; words up to 32 chars (a longer word
+# would bridge the fixed gutter).
+_TITLE_WORDS = ("document", "heading", "overview", "summary", "sections", "report")
+_pdfish_title_payload = partial(_titled_page, _TITLE_WORDS, 85, 10,
+                                ((40, 120), (330, 120)))
+
+
+def extract_pdfish_title_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spanning-title reading order through the REAL extraction stage (the
+    r3 capability, oracle-gated): expected flat text = the fixed title then
+    the doc's words in original order (column-major one-word lines restore
+    it by construction); n_units = 1 + word count. Docs are filtered to
+    <= TITLE_MAX_WORDS words on both engines so the page geometry is fixed
+    (two columns, page width 612 — the spanning threshold must not move
+    with content)."""
+    return _titled_docs(spark, sf_dir, _pdfish_title_payload, 32)
+
+
+EXTRACT_PDFISH_TITLE_SQL = _titled_sql(_TITLE_WORDS, 32)
+
+
+# Spanning title whose y-band OVERLAPS column 2's first line band (the r4
+# run-level spanning case): title at y=100 (band [100,110)), column 1
+# one-word lines at x=40, y=120+20k (disjoint from the title), column 2 at
+# x=500, y=108+20k — its FIRST line's band [108,118) merges with the
+# title's into one y-band holding a spanning run and a column run.
+# Band-level spanning detection (r3) would see >= 2 x-runs, call the band
+# non-spanning, and interleave the title into the columns.
+# Title: ten 4-char words from x=40 -> extent 10*40 - 8 = 392 px
+# >= ceil(3/5 * 612) = 368 (spanning) with x_end = 432, >= one column gap
+# away from column 2 at x=500.
 _OVERLAP_TITLE = ("plan", "data", "over", "view", "spec", "note",
                   "task", "item", "word", "line")
-OVERLAP_MAX_WORDS = 28
 OVERLAP_MAX_WORD_LEN = 14  # col2 words must fit x=500..612
-
-
-def _pdfish_overlap_payload(doc_id: int, text: str) -> str:
-    """Spanning title whose y-band OVERLAPS column 2's first line band (the
-    r4 run-level spanning case): title at y=100 (band [100,110)), column 1
-    one-word lines at x=40, y=120+20k (disjoint from the title), column 2
-    at x=500, y=108+20k — its FIRST line's band [108,118) merges with the
-    title's into one y-band holding a spanning run and a column run.
-    Band-level spanning detection (r3) would see >= 2 x-runs, call the band
-    non-spanning, and interleave the title into the columns."""
-    words = _ws_tokens(text)
-    recs = []
-    x = 40
-    for w in _OVERLAP_TITLE:
-        for ch in w:
-            recs.append(f"g {ch} {x} 100 8 10")
-            x += 8
-        x += 8
-    for c0 in range(0, len(words), 14):
-        x0, y0 = (40, 120) if c0 == 0 else (500, 108)
-        for k, w in enumerate(words[c0 : c0 + 14]):
-            x = x0
-            y = y0 + 20 * k
-            for ch in w:
-                recs.append(f"g {ch} {x} {y} 8 10")
-                x += 8
-    Random(doc_id).shuffle(recs)
-    return "%PDFISH 612 792\n" + "\n".join(recs) + "\n"
+_pdfish_overlap_payload = partial(_titled_page, _OVERLAP_TITLE, 100, 10,
+                                  ((40, 120), (500, 108)))
 
 
 def extract_pdfish_overlap_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,82 +513,30 @@ def extract_pdfish_overlap_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     original order — correct ONLY if the spanning run is detected at run
     level inside the merged band and its column co-tenants re-attach to the
     region below; n_units = 1 + word count. Docs filtered to
-    <= OVERLAP_MAX_WORDS words of <= OVERLAP_MAX_WORD_LEN chars on both
+    <= TITLE_MAX_WORDS words of <= OVERLAP_MAX_WORD_LEN chars on both
     engines so the geometry is fixed."""
-    d = _docs(spark, sf_dir)
-    toks = F.filter(
-        F.split(F.trim(F.lower("text")), WS_CLASS + "+"),
-        lambda x: x != "",
-    )
-    d = d.filter(
-        (F.length(F.trim("text")) > 0)
-        & (F.size(toks) <= OVERLAP_MAX_WORDS)
-        & (F.size(F.filter(toks, lambda x: F.length(x) > OVERLAP_MAX_WORD_LEN)) == 0)
-    )
-    out = _glyph_pages(d, _pdfish_overlap_payload)
-    return out.select(
-        "doc_id",
-        F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
-            "extracted_flat"
-        ),
-        F.col("n_units").cast("long").alias("n_units"),
-    ).orderBy("doc_id")
+    return _titled_docs(spark, sf_dir, _pdfish_overlap_payload, OVERLAP_MAX_WORD_LEN)
 
 
-EXTRACT_PDFISH_OVERLAP_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, text,
-         list_filter(regexp_split_to_array(trim(lower(text)), '{WS_CLASS}+'),
-                     t -> t <> '') AS ts
-  FROM documents WHERE length(trim(text)) > 0)
-SELECT doc_id,
-       '{" ".join(_OVERLAP_TITLE)} ' || trim(regexp_replace(text, '{WS_CLASS}+', ' ', 'g'))
-         AS extracted_flat,
-       CAST(1 + len(ts) AS BIGINT) AS n_units
-FROM toks
-WHERE len(ts) <= {OVERLAP_MAX_WORDS}
-  AND len(list_filter(ts, t -> length(t) > {OVERLAP_MAX_WORD_LEN})) = 0
-ORDER BY doc_id
-"""
+EXTRACT_PDFISH_OVERLAP_SQL = _titled_sql(_OVERLAP_TITLE, OVERLAP_MAX_WORD_LEN)
 
 
-# fixed merged-variant title: ten 4-char TALL (ht=16) words from x=40 ->
-# extent 392 >= ceil(3/5 * 612) = 368 (spanning), x_end = 432 >= one column
-# gap (32) away from column 2 at x=500
+# Spanning TALL title (ht=16) sharing ONE x-run with column 1's first line
+# (the r5 glyph-height-split case): title at y=100 (band [100,116)),
+# column 1 one-word lines at x=40 STARTING AT y=108 — its first line's
+# band [108,118) merges with the title's y-band AND its x-projection
+# starts at the title's own x-origin, so extent- and run-level detection
+# both see one spanning run; only the height midpoint split (title ht=16
+# vs body ht=10) separates them. Column 2 sits at x=500, y=120. A
+# height-blind reader would interleave the title with column 1's first
+# line, glyph by glyph, in x order.
+# Title: ten 4-char words from x=40 -> extent 392 >= ceil(3/5 * 612) = 368
+# (spanning), x_end = 432 >= one column gap (32) away from column 2 at x=500.
 _HEIGHTS_TITLE = ("head", "body", "text", "page", "band", "rule",
                   "glyp", "mark", "span", "unit")
-HEIGHTS_MAX_WORDS = 28
 HEIGHTS_MAX_WORD_LEN = 14  # column words must fit their 112-px slots
-
-
-def _pdfish_heights_payload(doc_id: int, text: str) -> str:
-    """Spanning TALL title (ht=16) sharing ONE x-run with column 1's first
-    line (the r5 glyph-height-split case): title at y=100 (band [100,116)),
-    column 1 one-word lines at x=40 STARTING AT y=108 — its first line's
-    band [108,118) merges with the title's y-band AND its x-projection
-    starts at the title's own x-origin, so extent- and run-level detection
-    both see one spanning run; only the height midpoint split (title ht=16
-    vs body ht=10) separates them. Column 2 sits at x=500, y=120. A
-    height-blind reader would interleave the title with column 1's first
-    line, glyph by glyph, in x order."""
-    words = _ws_tokens(text)
-    recs = []
-    x = 40
-    for w in _HEIGHTS_TITLE:
-        for ch in w:
-            recs.append(f"g {ch} {x} 100 8 16")
-            x += 8
-        x += 8
-    for c0 in range(0, len(words), 14):
-        x0, y0 = (40, 108) if c0 == 0 else (500, 120)
-        for k, w in enumerate(words[c0 : c0 + 14]):
-            x = x0
-            y = y0 + 20 * k
-            for ch in w:
-                recs.append(f"g {ch} {x} {y} 8 10")
-                x += 8
-    Random(doc_id).shuffle(recs)
-    return "%PDFISH 612 792\n" + "\n".join(recs) + "\n"
+_pdfish_heights_payload = partial(_titled_page, _HEIGHTS_TITLE, 100, 16,
+                                  ((40, 108), (500, 120)))
 
 
 def extract_pdfish_heights_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -593,45 +545,14 @@ def extract_pdfish_heights_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     — correct ONLY if the mixed-height spanning run is split at the height
     midpoint, the tall subset emitted as the full-width block and the short
     column-1 glyphs re-attached to the region below; n_units = 1 + word
-    count. Docs filtered to <= HEIGHTS_MAX_WORDS words of <=
+    count. Docs filtered to <= TITLE_MAX_WORDS words of <=
     HEIGHTS_MAX_WORD_LEN chars on both engines so the geometry is fixed.
     Reference analog: per-component crop separation of overlapping
     components (ref: interpreter.py:133-171, :303-308)."""
-    d = _docs(spark, sf_dir)
-    toks = F.filter(
-        F.split(F.trim(F.lower("text")), WS_CLASS + "+"),
-        lambda x: x != "",
-    )
-    d = d.filter(
-        (F.length(F.trim("text")) > 0)
-        & (F.size(toks) <= HEIGHTS_MAX_WORDS)
-        & (F.size(F.filter(toks, lambda x: F.length(x) > HEIGHTS_MAX_WORD_LEN)) == 0)
-    )
-    out = _glyph_pages(d, _pdfish_heights_payload)
-    return out.select(
-        "doc_id",
-        F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
-            "extracted_flat"
-        ),
-        F.col("n_units").cast("long").alias("n_units"),
-    ).orderBy("doc_id")
+    return _titled_docs(spark, sf_dir, _pdfish_heights_payload, HEIGHTS_MAX_WORD_LEN)
 
 
-EXTRACT_PDFISH_HEIGHTS_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, text,
-         list_filter(regexp_split_to_array(trim(lower(text)), '{WS_CLASS}+'),
-                     t -> t <> '') AS ts
-  FROM documents WHERE length(trim(text)) > 0)
-SELECT doc_id,
-       '{" ".join(_HEIGHTS_TITLE)} ' || trim(regexp_replace(text, '{WS_CLASS}+', ' ', 'g'))
-         AS extracted_flat,
-       CAST(1 + len(ts) AS BIGINT) AS n_units
-FROM toks
-WHERE len(ts) <= {HEIGHTS_MAX_WORDS}
-  AND len(list_filter(ts, t -> length(t) > {HEIGHTS_MAX_WORD_LEN})) = 0
-ORDER BY doc_id
-"""
+EXTRACT_PDFISH_HEIGHTS_SQL = _titled_sql(_HEIGHTS_TITLE, HEIGHTS_MAX_WORD_LEN)
 
 
 def extract_html_blocks_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

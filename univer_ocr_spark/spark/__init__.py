@@ -1,2 +1,2 @@
-"""Spark-side engine: session config, extraction pipeline, skew handling,
-manifest checkpoint/resume."""
+"""Spark-side engine: session config, extraction pipeline with byte-sized
+tasks, manifest checkpoint/resume."""

@@ -1,23 +1,23 @@
-"""The extraction pipeline: Arrow-batched per-turn extraction + explicit
-partitioning / skew salting.
+"""The extraction pipeline: Arrow-batched per-turn extraction over
+byte-sized tasks, plus the per-conversation rollup.
 
 Spark restatement of the reference's predict path (ref: my_model/model.py:489-529
 ModelSystem component chain; my_model/predict.py:34-66): the context dict
 becomes DataFrame columns, the per-paragraph/line worker pools
-(ref: interpreter.py:350-418) become Spark tasks over hash partitions, and
+(ref: interpreter.py:350-418) become Spark tasks over scan splits, and
 the nested text result becomes (extracted_text, spans) columns.
 
 Scale design (SURVEY.md X14 — the one thing the reference lacks):
-- extraction is row-local, so the hot path has no shuffle: by default
+- extraction is row-local, so the hot path has no shuffle:
   ``run_extraction`` only merges small scan splits (a narrow ``coalesce``)
   into byte-sized tasks, because every Python task pays a fixed set-up
-  cost before it reads a row; ``partitions=N`` instead salts
-  mega-conversations and hash-repartitions (one shuffle);
+  cost before it reads a row. Nothing is keyed by ``conv_id``, so there is
+  no key skew for a mega-conversation to cause;
 - per-conversation aggregates are one ``groupBy``: Spark's partial
   aggregation sends a reducer one row per conversation per map task, so a
   10^4-turn mega-conversation cannot serialize one reducer;
 - output ordering is by (conv_id, turn_idx) *columns*, never partition
-  layout, so neither merging nor salting can break the ordering contract.
+  layout, so merging splits cannot break the ordering contract.
 """
 
 from __future__ import annotations
@@ -121,36 +121,6 @@ def extract_stage(df: DataFrame, payload_col: str = "text",
     return df.mapInArrow(fn, schema=out_schema)
 
 
-def detect_skewed_convs(df: DataFrame, threshold: int = 10000) -> List[str]:
-    """Cheap pre-pass: conv_ids with more than ``threshold`` turns.
-
-    At 10^12 turns this is a single map-side-combined groupBy on one string
-    key whose result (the skew list) is tiny by definition — safe to collect
-    and broadcast.
-    """
-    rows = (
-        df.groupBy("conv_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > threshold)
-        .select("conv_id")
-        .collect()
-    )
-    return [r["conv_id"] for r in rows]
-
-
-def with_salt(df: DataFrame, skewed: List[str], n_salt: int = 16) -> DataFrame:
-    """Add a ``salt`` column: 0 for normal convs, turn_idx-derived for
-    mega-conversations, so a later repartition/groupBy on (conv_id, salt)
-    spreads each mega-conv over ``n_salt`` reducers (SURVEY.md X14)."""
-    if not skewed:
-        return df.withColumn("salt", F.lit(0))
-    skew_col = F.col("conv_id").isin(skewed)
-    return df.withColumn(
-        "salt",
-        F.when(skew_col, F.pmod(F.col("turn_idx"), F.lit(n_salt))).otherwise(F.lit(0)),
-    )
-
-
 def _byte_sized_partitions(df: DataFrame) -> int:
     """Task count for extracting ``df`` without a shuffle: one task per core,
     or one per advisory partition size
@@ -166,40 +136,18 @@ def _byte_sized_partitions(df: DataFrame) -> int:
                2**31 - 1)
 
 
-def run_extraction(
-    df: DataFrame,
-    partitions: int | None = None,
-    salt_threshold: int = 10000,
-    n_salt: int = 16,
-    drop_payload: bool = False,
-) -> DataFrame:
-    """Full pipeline: task sizing → extraction stage.
+def run_extraction(df: DataFrame, drop_payload: bool = False) -> DataFrame:
+    """Full pipeline: task sizing → extraction stage → version column.
 
-    ``partitions=None`` does not shuffle. It merges input partitions with a
-    narrow ``coalesce`` down to ``max(cores, ceil(estimated bytes / advisory
-    partition size))`` tasks: each Python task pays a fixed set-up cost
-    before its first row, so small scan splits are merged while splits
-    already larger than the advisory size stay as they are.
-
-    ``partitions=N`` salts mega-conversations (more than ``salt_threshold``
-    turns over ``n_salt`` buckets), hash-repartitions on (conv_id, salt) to
-    N partitions and sorts each by (conv_id, turn_idx).
+    No shuffle: input partitions are merged with a narrow ``coalesce`` down
+    to ``max(cores, ceil(estimated bytes / advisory partition size))``
+    tasks. Each Python task pays a fixed set-up cost before its first row,
+    so small scan splits are merged while splits already larger than the
+    advisory size stay as they are. Tasks are sized by bytes, not keyed by
+    ``conv_id``, so a mega-conversation weighs on a task only by its bytes.
     """
-    if partitions:
-        skewed = detect_skewed_convs(df, salt_threshold)
-        df = (
-            with_salt(df, skewed, n_salt)
-            .repartition(partitions, "conv_id", "salt")
-            .drop("salt")
-            # stable-ordering invariant (O5 / north_rule): turns of a conv
-            # arrive in turn_idx order within each partition; the OUTPUT
-            # contract remains the (conv_id, turn_idx) columns, so salting
-            # can never break ordering
-            .sortWithinPartitions("conv_id", "turn_idx")
-        )
-    else:
-        df = df.coalesce(_byte_sized_partitions(df))
-    out = extract_stage(df, drop_payload=drop_payload)
+    out = extract_stage(df.coalesce(_byte_sized_partitions(df)),
+                        drop_payload=drop_payload)
     return out.withColumn("extraction_version", F.lit(EXTRACTION_VERSION))
 
 
