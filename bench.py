@@ -39,31 +39,16 @@ def sf_of(d: str) -> float:
         return 0.1
 
 
-def _generator_fingerprint() -> str:
-    """Hash of the generator sources: a changed generator must invalidate
-    cached bench tables (a stale cache would silently benchmark old data)."""
-    import glob
-    import hashlib
-
-    h = hashlib.blake2b(digest_size=4)
-    root = os.path.dirname(os.path.abspath(__file__))
-    for f in sorted(glob.glob(os.path.join(root, "univer_ocr_spark/generator/*.py"))) + [
-        os.path.join(root, "univer_ocr_spark/constants.py")
-    ]:
-        with open(f, "rb") as fh:
-            h.update(fh.read())
-    return h.hexdigest()
-
-
 def ensure_transcripts(spark, sf: float) -> tuple[str, int]:
     """Materialize the bench transcript table (no goldens) once per size."""
+    from univer_ocr_spark.generator.goldens import generator_fingerprint
     from univer_ocr_spark.generator.transcripts import transcripts_df
 
     n_turns_target = int(os.environ.get("SPARK_GRAFT_TURNS", int(1_000_000 * sf)))
     # avg conv ≈ 11 turns; one mega-conv at ~5% of turns skews conv_stats
     mega_size = max(200, n_turns_target // 20)
     n_convs = max(20, (n_turns_target - mega_size) // 11)
-    path = f"/tmp/univer_bench_transcripts_{n_turns_target}_{_generator_fingerprint()}"
+    path = f"/tmp/univer_bench_transcripts_{n_turns_target}_{generator_fingerprint()}"
     generated = False
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         generated = True

@@ -62,22 +62,6 @@ def test_kill_and_resume(spark, tmp_path):
     assert _sorted_rows(read_output(spark, workdir)) == clean
 
 
-def test_concurrent_buckets_equal_serial(spark, tmp_path):
-    """max_concurrent>1 must produce the identical output table and a full
-    manifest — commit-per-bucket semantics survive concurrency."""
-    df = transcripts_df(spark, 10, with_goldens=False)
-    wd_ser = str(tmp_path / "ser")
-    wd_con = str(tmp_path / "con")
-    assert len(run_with_manifest(spark, df, wd_ser, n_buckets=N_BUCKETS)) == N_BUCKETS
-    got = run_with_manifest(spark, df, wd_con, n_buckets=N_BUCKETS,
-                            max_concurrent=4)
-    assert got == list(range(N_BUCKETS))
-    assert _sorted_rows(read_output(spark, wd_con)) == \
-        _sorted_rows(read_output(spark, wd_ser))
-    m = read_manifest(spark, wd_con)
-    assert {r["bucket"] for r in m.collect()} == set(range(N_BUCKETS))
-
-
 def test_rerun_is_noop(spark, tmp_path):
     df = transcripts_df(spark, 6, with_goldens=False)
     workdir = str(tmp_path / "job2")

@@ -109,7 +109,7 @@ src/dst symmetrizing union (both branches would otherwise re-execute the
 whole verify lineage) and folds the CC convergence count into the jump
 pass (one job per round).
 
-r6 (OPTIMIZATION_r06.md; plans/r06/ holds the before/after evidence):
+r6 (OPTIMIZATION_r06.md records the before/after evidence):
 shared-key pair generation (LSH candidates, ngram shared counts, SimHash
 bands and embedding sign-LSH bands) is one primitive, `dedup.bucket_pairs`:
 groupBy(bucket key) + array_sort(collect_list) + combination explode — the

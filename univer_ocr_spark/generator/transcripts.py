@@ -96,16 +96,6 @@ def iter_conv_rows(idx: int, mega_conv_count: int = 0, mega_conv_size: int = 100
         yield build_turn(cid, t, global_seed)
 
 
-def build_transcripts_rows(n_convs: int, mega_conv_count: int = 0,
-                           mega_conv_size: int = 1000,
-                           global_seed: int = GLOBAL_SEED) -> List[Dict]:
-    """Local (driver-side) builder for tests."""
-    rows: List[Dict] = []
-    for idx in range(n_convs):
-        rows.extend(iter_conv_rows(idx, mega_conv_count, mega_conv_size, global_seed))
-    return rows
-
-
 def transcripts_df(spark, n_convs: int, mega_conv_count: int = 0,
                    mega_conv_size: int = 1000, global_seed: int = GLOBAL_SEED,
                    with_goldens: bool = True, partitions: int | None = None):

@@ -91,30 +91,57 @@ def _glyph_pages(d: DataFrame, layout) -> DataFrame:
                          build_payloads=build)
 
 
+def _wrapped_docs(spark: SparkSession, sf_dir: str, head: str, body, tail: str,
+                  *cols, keep=None) -> DataFrame:
+    """Extraction of ``head + body + tail`` payloads (JVM-side concat) for
+    the docs passing ``keep``; returns ``doc_id`` and ``cols``, by doc_id.
+
+    ``keep`` defaults to "not whitespace-only": such docs would extract to
+    '' (an empty block is not main) while the oracle returns the text
+    verbatim — exclude them identically on both sides (none exist in the
+    shipped testdata; this guards regenerated data)."""
+    if keep is None:
+        keep = F.length(F.trim("text")) > 0
+    wrapped = _docs(spark, sf_dir).filter(keep).select(
+        "doc_id", F.concat(F.lit(head), body, F.lit(tail)).alias("text")
+    )
+    return (
+        extract_stage(wrapped, drop_payload=True)
+        .select("doc_id", *cols)
+        .orderBy("doc_id")
+    )
+
+
+def _long(name: str):
+    return F.col(name).cast("long").alias(name)
+
+
+def _flat(col):
+    return F.replace(F.replace(col, F.lit("\n"), F.lit(" ")), F.lit("\r"), F.lit(" "))
+
+
+def _flat_units():
+    """``(extracted_flat, n_units)``: the extracted units joined by spaces,
+    and their count."""
+    return (
+        F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
+            "extracted_flat"
+        ),
+        _long("n_units"),
+    )
+
+
 def extract_html_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wrap each doc in boilerplate-laden HTML (JVM-side concat), run the
     real extraction stage, return the main content. Expected = sanitized
     text (nav/footer stripped, <p> kept)."""
-    d = _docs(spark, sf_dir)
-    payload = F.concat(
-        F.lit(
-            '<html><head><title>doc</title><style>p{margin:0}</style></head><body>'
-            '<nav><ul><li><a href="/home">home</a></li><li><a href="/about">about</a></li></ul></nav><p>'
-        ),
+    return _wrapped_docs(
+        spark, sf_dir,
+        '<html><head><title>doc</title><style>p{margin:0}</style></head><body>'
+        '<nav><ul><li><a href="/home">home</a></li><li><a href="/about">about</a></li></ul></nav><p>',
         _sanitize(F.col("text")),
-        F.lit('</p><footer><a href="/tos">terms</a> (c) example</footer></body></html>'),
-    )
-    # whitespace-only docs would extract to '' (an empty block is not main)
-    # while the oracle returns the text verbatim — exclude them identically
-    # on both sides (none exist in the shipped testdata; this guards
-    # regenerated data)
-    wrapped = d.filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", payload.alias("text")
-    )
-    return (
-        extract_stage(wrapped)
-        .select("doc_id", "extracted_text")
-        .orderBy("doc_id")
+        '</p><footer><a href="/tos">terms</a> (c) example</footer></body></html>',
+        "extracted_text",
     )
 
 
@@ -132,26 +159,15 @@ def extract_html_attr_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     garbled text nodes). Expected = sanitized text in exactly one unit/one
     span — a mis-split tag would leak attribute fragments as extra
     spans/units, so the count columns pin the scanner, not just the text."""
-    d = _docs(spark, sf_dir)
-    payload = F.concat(
-        F.lit(
-            '<html><body>'
-            '<nav data-fn="(x) => x>0"><a href="/" onclick="go(1>0)">home</a></nav>'
-            "<p class=\"main\" data-cmp='a<b>c' onclick=\"if (n>1) f('q')\">"
-        ),
+    return _wrapped_docs(
+        spark, sf_dir,
+        '<html><body>'
+        '<nav data-fn="(x) => x>0"><a href="/" onclick="go(1>0)">home</a></nav>'
+        "<p class=\"main\" data-cmp='a<b>c' onclick=\"if (n>1) f('q')\">",
         _sanitize(F.col("text")),
-        F.lit('</p><footer data-x="y>z">(c) example</footer></body></html>'),
+        '</p><footer data-x="y>z">(c) example</footer></body></html>',
+        "extracted_text", _long("n_units"), _long("n_spans"),
     )
-    wrapped = d.filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", payload.alias("text")
-    )
-    out = extract_stage(wrapped)
-    return out.select(
-        "doc_id",
-        "extracted_text",
-        F.col("n_units").cast("long").alias("n_units"),
-        F.col("n_spans").cast("long").alias("n_spans"),
-    ).orderBy("doc_id")
 
 
 EXTRACT_HTML_ATTR_SQL = f"""
@@ -171,26 +187,16 @@ def extract_html_entities_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     route the numeric encoding AFTER the named one so neither pass rewrites
     the other's output ('&lt;' contains a 't'; '&#116;' contains an '&').
     Expected = the injected text, stated by the oracle by construction."""
-    d = _docs(spark, sf_dir)
     content = F.translate(F.col("text"), "aeoui", "&<>\"'")
     enc = F.translate(content, "tr", "\x01\x02")
     for ch, ref in (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"),
                     ('"', "&quot;"), ("'", "&apos;"),
                     ("\x01", "&#116;"), ("\x02", "&#x72;")):
         enc = F.replace(enc, F.lit(ch), F.lit(ref))
-    payload = F.concat(
-        F.lit('<html><body><nav><a href="/">home</a></nav><p>'),
-        enc,
-        F.lit("</p></body></html>"),
-    )
-    wrapped = d.filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", payload.alias("text")
-    )
-    return (
-        extract_stage(wrapped)
-        .select("doc_id", "extracted_text",
-                F.col("n_spans").cast("long").alias("n_spans"))
-        .orderBy("doc_id")
+    return _wrapped_docs(
+        spark, sf_dir,
+        '<html><body><nav><a href="/">home</a></nav><p>', enc, "</p></body></html>",
+        "extracted_text", _long("n_spans"),
     )
 
 
@@ -222,26 +228,16 @@ def extract_html_br_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit (span-safe: no phantom characters — units join with newline).
     Expected flat text = whitespace-normalized sanitized doc text;
     n_units = word count — both stated by the oracle by construction."""
-    d = _docs(spark, sf_dir)
     norm = F.trim(
         F.regexp_replace(_sanitize(F.col("text")), WS_CLASS + "+", " ")
     )
-    payload = F.concat(
-        F.lit('<html><body><nav><a href="/">home</a></nav><p>'),
+    return _wrapped_docs(
+        spark, sf_dir,
+        '<html><body><nav><a href="/">home</a></nav><p>',
         F.replace(norm, F.lit(" "), F.lit("<br>")),
-        F.lit("</p></body></html>"),
+        "</p></body></html>",
+        *_flat_units(),
     )
-    wrapped = d.filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", payload.alias("text")
-    )
-    out = extract_stage(wrapped)
-    return out.select(
-        "doc_id",
-        F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
-            "extracted_flat"
-        ),
-        F.col("n_units").cast("long").alias("n_units"),
-    ).orderBy("doc_id")
 
 
 EXTRACT_HTML_BR_SQL = f"""
@@ -259,26 +255,14 @@ def extract_markup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wrap each doc in an ANSI status line + markdown fences, run the real
     extraction stage. Expected = text with newlines flattened (content is
     ASCII → no confusable collapse fires)."""
-    d = _docs(spark, sf_dir)
-    flat = F.replace(
-        F.replace(F.col("text"), F.lit("\n"), F.lit(" ")),
-        F.lit("\r"), F.lit(" "),
-    )
-    payload = F.concat(
-        F.lit("\x1b[2K\x1b[32m[ok] fetch done\x1b[0m\n```\n"),
-        flat,
-        F.lit("\n```\n\x1b[2K[exit 0]"),
-    )
+    flat = _flat(F.col("text"))
     # envelope-shaped / fence-shaped / ESC-BLANK-confusable-bearing doc text
     # would be transformed by the extractor while the oracle keeps it
     # verbatim — exclude identically on both sides
-    wrapped = d.filter(_markup_safe(flat)).select(
-        "doc_id", payload.alias("text")
-    )
-    return (
-        extract_stage(wrapped)
-        .select("doc_id", "extracted_text")
-        .orderBy("doc_id")
+    return _wrapped_docs(
+        spark, sf_dir,
+        "\x1b[2K\x1b[32m[ok] fetch done\x1b[0m\n```\n", flat, "\n```\n\x1b[2K[exit 0]",
+        "extracted_text", keep=_markup_safe(flat),
     )
 
 
@@ -366,14 +350,11 @@ def extract_pdfish_columns_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the word-count oracle would state 1 — exclude identically on both
     # sides, like the html twins
     d = _docs(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
-    out = _glyph_pages(d, _pdfish_columns_payload)
-    return out.select(
-        "doc_id",
-        F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
-            "extracted_flat"
-        ),
-        F.col("n_units").cast("long").alias("n_units"),
-    ).orderBy("doc_id")
+    return (
+        _glyph_pages(d, _pdfish_columns_payload)
+        .select("doc_id", *_flat_units())
+        .orderBy("doc_id")
+    )
 
 
 EXTRACT_PDFISH_COLUMNS_SQL = f"""
@@ -436,14 +417,7 @@ def _titled_docs(spark: SparkSession, sf_dir: str, layout,
         & (F.size(toks) <= TITLE_MAX_WORDS)
         & (F.size(F.filter(toks, lambda x: F.length(x) > max_word_len)) == 0)
     )
-    out = _glyph_pages(d, layout)
-    return out.select(
-        "doc_id",
-        F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
-            "extracted_flat"
-        ),
-        F.col("n_units").cast("long").alias("n_units"),
-    ).orderBy("doc_id")
+    return _glyph_pages(d, layout).select("doc_id", *_flat_units()).orderBy("doc_id")
 
 
 def _titled_sql(title, max_word_len: int) -> str:
@@ -561,22 +535,13 @@ def extract_html_blocks_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal to 'doc\\n' + sanitized body — the oracle states these counts by
     construction, so the driver's hash check covers unit ordering and span
     accounting, not just text."""
-    d = _docs(spark, sf_dir)
-    payload = F.concat(
-        F.lit('<html><body><nav><a href="/">x</a></nav><h1>doc</h1><p>'),
+    return _wrapped_docs(
+        spark, sf_dir,
+        '<html><body><nav><a href="/">x</a></nav><h1>doc</h1><p>',
         _sanitize(F.col("text")),
-        F.lit("</p></body></html>"),
+        "</p></body></html>",
+        _long("n_units"), _long("n_spans"), "extracted_text",
     )
-    wrapped = d.filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", payload.alias("text")
-    )
-    out = extract_stage(wrapped)
-    return out.select(
-        "doc_id",
-        F.col("n_units").cast("long").alias("n_units"),
-        F.col("n_spans").cast("long").alias("n_spans"),
-        "extracted_text",
-    ).orderBy("doc_id")
 
 
 EXTRACT_HTML_BLOCKS_SQL = f"""
@@ -591,22 +556,11 @@ def extract_markup_collapse_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     every Latin 'a' (the OCR-style noise the reference's similar-pairs
     collapse removes, ref: primitives/__init__.py:16-42); extraction must
     recover the original text exactly."""
-    d = _docs(spark, sf_dir)
-    flat = F.replace(
-        F.replace(F.col("text"), F.lit("\n"), F.lit(" ")),
-        F.lit("\r"), F.lit(" "),
-    )
-    noisy = F.replace(flat, F.lit("a"), F.lit("aа"))
-    payload = F.concat(
-        F.lit("\x1b[2K[fetching]\n```\n"), noisy, F.lit("\n```")
-    )
-    wrapped = d.filter(_markup_safe(flat)).select(
-        "doc_id", payload.alias("text")
-    )
-    return (
-        extract_stage(wrapped)
-        .select("doc_id", "extracted_text")
-        .orderBy("doc_id")
+    flat = _flat(F.col("text"))
+    return _wrapped_docs(
+        spark, sf_dir,
+        "\x1b[2K[fetching]\n```\n", F.replace(flat, F.lit("a"), F.lit("aа")), "\n```",
+        "extracted_text", keep=_markup_safe(flat),
     )
 
 

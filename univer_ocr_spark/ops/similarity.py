@@ -83,34 +83,49 @@ def _dot(a: str, b: str):
     )
 
 
-def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k per query vector (tie-break: candidate id)."""
-    e = _emb(spark, sf_dir)
-    # norms precomputed per side: 19900 pairs x 3 interpreted HOF dots would
-    # triple the work vs one dot per pair + cached norms
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
+def _sides(v: DataFrame, emb: str, *carry: str) -> tuple[DataFrame, DataFrame]:
+    """Query rows (``vec_id < N_QUERIES``) as ``(query_id, q_emb, q_norm)``
+    and candidates as ``(cand_id, c_emb, c_norm, *carry)``, both persisted.
+
+    Norms are precomputed per side: 19900 pairs x 3 interpreted HOF dots
+    would triple the work vs one dot per pair + cached norms. persist =
+    projection barrier: without it Catalyst collapses the norm column back
+    into the per-pair expression (3 interpreted HOF dots per pair instead
+    of 1)."""
+    q = v.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col(emb).alias("q_emb"),
     ).withColumn("q_norm", F.sqrt(_dot("q_emb", "q_emb"))).persist()
-    c = e.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("c_emb"),
+    c = v.filter(F.col("vec_id") >= N_QUERIES).select(
+        F.col("vec_id").alias("cand_id"), F.col(emb).alias("c_emb"), *carry,
     ).withColumn("c_norm", F.sqrt(_dot("c_emb", "c_emb"))).persist()
-    # persist = projection barrier: without it Catalyst collapses the norm
-    # column back into the per-pair expression (3 interpreted HOF dots per
-    # pair instead of 1)
-    # round to 6dp BEFORE the rank window: an unrounded near-tie could flip
+    return q, c
+
+
+def _cos(a: str, b: str, na: str, nb: str):
+    # round to 6dp BEFORE any rank window: an unrounded near-tie could flip
     # rank between Spark's left fold and DuckDB's list_dot_product
-    cos = F.round(_dot("q_emb", "c_emb") / F.col("q_norm") / F.col("c_norm"), 6)
+    return F.round(_dot(a, b) / F.col(na) / F.col(nb), 6)
+
+
+def _top_k(scored: DataFrame, k: int, *extra) -> DataFrame:
+    """The ``k`` best candidates per query of ``scored``, which carries the
+    6-dp ``_cos`` column ``cos``; ranked by (cos desc, cand_id asc)."""
     w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
     return (
-        c.crossJoin(F.broadcast(q))
-        .withColumn("cos", cos)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id", "rank", F.round("cos", 4).alias("cosine"))
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "cand_id", *extra, "rank",
+                F.round("cos", 4).alias("cosine"))
         .orderBy("query_id", "rank")
     )
+
+
+def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k per query vector (tie-break: candidate id)."""
+    q, c = _sides(_emb(spark, sf_dir), "embedding")
+    scored = c.crossJoin(F.broadcast(q)).withColumn(
+        "cos", _cos("q_emb", "c_emb", "q_norm", "c_norm"))
+    return _top_k(scored, TOP_K)
 
 
 ANN_BRUTEFORCE_SQL = f"""
@@ -235,14 +250,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bit bands (entropy)."""
     e = _emb(spark, sf_dir)
     bits = _sign_band_bits(_corpus_count(e, sf_dir))
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-    ).withColumn("q_norm", F.sqrt(_dot("q_emb", "q_emb"))).persist()
-    c = e.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("c_emb"),
-    ).withColumn("c_norm", F.sqrt(_dot("c_emb", "c_emb"))).persist()
+    q, c = _sides(e, "embedding")
     qb = q.select(
         "query_id", F.explode(_sign_bands("q_emb", bits)).alias("bk")
     ).select("query_id", "bk.band", "bk.bkey")
@@ -252,18 +260,9 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = cb.join(F.broadcast(qb), ["band", "bkey"]).select(
         "query_id", "cand_id"
     ).distinct()
-    # round to 6dp BEFORE the rank window (cross-engine float convention)
-    cos = F.round(_dot("q_emb", "c_emb") / F.col("q_norm") / F.col("c_norm"), 6)
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "cand_id")
-        .withColumn("cos", cos)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= LSH_TOP_K)
-        .select("query_id", "cand_id", "rank", F.round("cos", 4).alias("cosine"))
-        .orderBy("query_id", "rank")
-    )
+    scored = cand.join(F.broadcast(q), "query_id").join(c, "cand_id").withColumn(
+        "cos", _cos("q_emb", "c_emb", "q_norm", "c_norm"))
+    return _top_k(scored, LSH_TOP_K)
 
 
 def ann_lsh_sql() -> str:
@@ -311,6 +310,47 @@ IVF_N_PROBE = 2
 IVF_TOP_K = 3
 
 
+def _ivf_topk(e: DataFrame, cell, out_col: str) -> DataFrame:
+    """The IVF pipeline over coarse cells ``cell`` (a column expression over
+    ``e``): per-cell centroids, each query's IVF_N_PROBE closest cells, exact
+    top-k over the probed cells' members; the probed cell is output as
+    ``out_col``."""
+    v = e.select(
+        "vec_id",
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
+        cell.alias("cell"),
+    )
+    # per-cell centroid as a pos-sorted ARRAY (fold order = pos order)
+    cent_pos = (
+        v.select("cell", F.posexplode("v").alias("pos", "val"))
+        .groupBy("cell", "pos")
+        .agg(F.round(F.avg("val"), 6).alias("cv"))
+    )
+    cent = (
+        cent_pos.groupBy("cell")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "cv"))),
+                lambda s: s["cv"],
+            ).alias("c_arr")
+        )
+        .withColumn("c_norm", F.sqrt(_dot("c_arr", "c_arr")))
+        .persist()
+    )
+    q, c = _sides(v, "v", "cell")
+    w_probe = W.partitionBy("query_id").orderBy(F.desc("c_cos"), F.asc("cell"))
+    probes = (
+        q.crossJoin(F.broadcast(cent))
+        .withColumn("c_cos", _cos("q_emb", "c_arr", "q_norm", "c_norm"))
+        .withColumn("prb", F.row_number().over(w_probe))
+        .filter(F.col("prb") <= IVF_N_PROBE)
+        .select("query_id", "q_emb", "q_norm", "cell")
+    )
+    scored = c.join(F.broadcast(probes), "cell").withColumn(
+        "cos", _cos("q_emb", "c_emb", "q_norm", "c_norm"))
+    return _top_k(scored, IVF_TOP_K, F.col("cell").alias(out_col))
+
+
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: coarse cells = per-label centroids (the k-means
     assignment a real IVF index trains; labels stand in deterministically),
@@ -325,66 +365,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     product, so every downstream float is a deterministic left fold of
     identical inputs.
     """
-    e = _emb(spark, sf_dir)
-    # per-label centroid as a pos-sorted ARRAY (fold order = pos order)
-    cent_pos = (
-        e.select("label", F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("label", "pos")
-        .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("cv"))
-    )
-    cent = (
-        cent_pos.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                lambda s: s["cv"],
-            ).alias("c_arr")
-        )
-        .withColumn("c_norm", F.sqrt(_dot("c_arr", "c_arr")))
-        .persist()
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("q_emb"),
-    ).withColumn("q_norm", F.sqrt(_dot("q_emb", "q_emb"))).persist()
-    w_probe = W.partitionBy("query_id").orderBy(
-        F.desc("c_cos"), F.asc("label")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "c_cos",
-            F.round(_dot("q_emb", "c_arr") / F.col("q_norm") / F.col("c_norm"), 6),
-        )
-        .withColumn("prb", F.row_number().over(w_probe))
-        .filter(F.col("prb") <= IVF_N_PROBE)
-        .select("query_id", "q_emb", "q_norm", "label")
-    )
-    # final rank rounds to 6dp BEFORE ordering (same convention as the probe
-    # stage): an unrounded near-tie between candidates could flip rank
-    # between Spark's left-fold and DuckDB's list_dot_product
-    c = e.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("c_emb"),
-        "label",
-    ).withColumn("cd_norm", F.sqrt(_dot("c_emb", "c_emb"))).persist()
-    # persist = projection barrier (CLAUDE.md lesson): without it Catalyst
-    # inlines cd_norm's HOF dot into the per-pair cos expression
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return (
-        c.join(F.broadcast(probes), "label")
-        .withColumn(
-            "cos",
-            F.round(_dot("q_emb", "c_emb") / F.col("q_norm") / F.col("cd_norm"), 6),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= IVF_TOP_K)
-        .select(
-            "query_id", "cand_id", F.col("label").alias("probed_label"),
-            "rank", F.round("cos", 4).alias("cosine"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _ivf_topk(_emb(spark, sf_dir), F.col("label"), "probed_label")
 
 
 ANN_IVF_SQL = f"""
@@ -457,59 +438,7 @@ def ann_ivf_scaled_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-partition production input, pin the fold by pre-aggregating per
     # input partition (sort-then-sum per cell) before the global avg if a
     # probe ranking ever needs to be bit-stable across runs.
-    v = e.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-        _sign_band_key("embedding", 0, bits).alias("cell"),
-    )
-    cent_pos = (
-        v.select("cell", F.posexplode("v").alias("pos", "val"))
-        .groupBy("cell", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("cv"))
-    )
-    cent = (
-        cent_pos.groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                lambda s: s["cv"],
-            ).alias("c_arr")
-        )
-        .withColumn("c_norm", F.sqrt(_dot("c_arr", "c_arr")))
-        .persist()
-    )
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q_emb")
-    ).withColumn("q_norm", F.sqrt(_dot("q_emb", "q_emb"))).persist()
-    w_probe = W.partitionBy("query_id").orderBy(F.desc("c_cos"), F.asc("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "c_cos",
-            F.round(_dot("q_emb", "c_arr") / F.col("q_norm") / F.col("c_norm"), 6),
-        )
-        .withColumn("prb", F.row_number().over(w_probe))
-        .filter(F.col("prb") <= IVF_N_PROBE)
-        .select("query_id", "q_emb", "q_norm", "cell")
-    )
-    c = v.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("cand_id"), F.col("v").alias("c_emb"), "cell"
-    ).withColumn("cd_norm", F.sqrt(_dot("c_emb", "c_emb"))).persist()
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return (
-        c.join(F.broadcast(probes), "cell")
-        .withColumn(
-            "cos",
-            F.round(_dot("q_emb", "c_emb") / F.col("q_norm") / F.col("cd_norm"), 6),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= IVF_TOP_K)
-        .select(
-            "query_id", "cand_id", F.col("cell").alias("probed_cell"),
-            "rank", F.round("cos", 4).alias("cosine"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _ivf_topk(e, _sign_band_key("embedding", 0, bits), "probed_cell")
 
 
 def ann_ivf_scaled_sql() -> str:

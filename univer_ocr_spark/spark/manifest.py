@@ -146,8 +146,8 @@ def _iceberg_commit(out: DataFrame, table: str, bucket: int, n_rows: int) -> str
     records the bucket committed; the parquet path's ``mode('overwrite')``
     clears the directory, so the Iceberg twin issues an explicit
     ``DELETE FROM ... WHERE bucket = b`` instead. Callers must serialize
-    calls (run_with_manifest holds its lock here) so the snapshot-id
-    read-back cannot observe another bucket's commit.
+    calls (run_with_manifest commits one bucket at a time) so the
+    snapshot-id read-back cannot observe another bucket's commit.
     """
     spark = out.sparkSession
 
@@ -178,25 +178,15 @@ def run_with_manifest(
     n_buckets: int = 16,
     input_snapshot: str = "",
     fail_after: Optional[int] = None,
-    max_concurrent: int = 1,
 ) -> List[int]:
     """Extract ``df`` bucket-by-bucket with commit-per-bucket semantics.
 
     Returns the list of buckets processed in THIS run (committed buckets
     from prior runs are skipped — the resume contract). ``fail_after=k``
     injects a crash after k bucket commits (for the kill/resume test).
-
-    ``max_concurrent>1`` keeps several buckets in flight at once (Spark
-    schedules concurrent jobs from multiple submitter threads) — at 10^12
-    turns a serial bucket loop leaves the cluster idle between job tails.
-    Bucket OUTPUT writes go to disjoint directories, so they are safe
-    concurrently; the tiny manifest append is serialized under a lock.
-    Commit semantics are unchanged: a bucket's manifest row lands only
-    after its output did, so a crash mid-flight resumes exactly.
+    A bucket's manifest row lands only after its output did, so a crash
+    mid-run resumes exactly.
     """
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
     staged = os.path.join(workdir, "staged")
     outdir = os.path.join(workdir, "extracted")
     manifest_dir = os.path.join(workdir, "manifest")
@@ -208,9 +198,12 @@ def run_with_manifest(
     iceberg_table = iceberg_table_name()
     if iceberg_table:
         _assert_bucket_partitioned(spark, iceberg_table)
-    manifest_lock = threading.Lock()
 
-    def process_bucket(b: int) -> None:
+    for b in range(n_buckets):
+        if b in done:
+            continue
+        if fail_after is not None and len(processed) >= fail_after:
+            raise RuntimeError(f"injected failure after {fail_after} buckets")
         t0 = time.time()
         bucket_dir = os.path.join(staged, f"bucket={b}")
         if not os.path.exists(bucket_dir):
@@ -220,16 +213,13 @@ def run_with_manifest(
         obs = Observation(f"bucket_{b}_rows_{int(t0 * 1e6)}")
         out = run_extraction(part).observe(obs, F.count(F.lit(1)).alias("n"))
         if iceberg_table:
-            # materialize the (expensive) extraction OUTSIDE the lock so
-            # concurrent buckets overlap their compute; only the cheap
-            # table commit + snapshot-id read-back serialize (pinning the
-            # read-back to THIS bucket's commit)
+            # the row count picks overwritePartitions or DELETE
+            # (_iceberg_commit); the persist stops the count and the commit
+            # from running the extraction twice
             staged_out = out.withColumn("bucket", F.lit(b)).persist()
-            staged_cnt = staged_out.count()
-            with manifest_lock:
-                output_snapshot = _iceberg_commit(
-                    staged_out, iceberg_table, b, staged_cnt
-                )
+            output_snapshot = _iceberg_commit(
+                staged_out, iceberg_table, b, staged_out.count()
+            )
             staged_out.unpersist()
         else:
             out.write.mode("overwrite").parquet(
@@ -248,28 +238,12 @@ def run_with_manifest(
             "rows_per_sec": round(n_rows / wall, 3) if wall > 0 else 0.0,
             "committed_at": time.time(),
         }
-        # the commit: manifest row lands only after the bucket output did;
-        # appends share one staging dir, hence the lock
-        with manifest_lock:
-            spark.createDataFrame([row], schema=MANIFEST_SCHEMA).write.mode(
-                "append"
-            ).parquet(manifest_dir)
-            processed.append(b)
-
-    todo = [b for b in range(n_buckets) if b not in done]
-    if fail_after is not None or max_concurrent <= 1:
-        # serial path (also the deterministic fail-injection path)
-        for b in todo:
-            if fail_after is not None and len(processed) >= fail_after:
-                raise RuntimeError(
-                    f"injected failure after {fail_after} buckets"
-                )
-            process_bucket(b)
-        return processed
-    with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
-        for f in [pool.submit(process_bucket, b) for b in todo]:
-            f.result()  # surface the first failure
-    return sorted(processed)
+        # the commit: manifest row lands only after the bucket output did
+        spark.createDataFrame([row], schema=MANIFEST_SCHEMA).write.mode(
+            "append"
+        ).parquet(manifest_dir)
+        processed.append(b)
+    return processed
 
 
 def read_output(spark: SparkSession, workdir: str) -> DataFrame:
