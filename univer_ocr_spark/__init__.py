@@ -12,7 +12,15 @@ transcript turns instead of rendered pixels).
 Architecture is Spark-first: one turn = one row; all per-turn parsing runs
 inside one Arrow-batched ``mapInArrow`` stage per query; cross-turn structure
 (task sizing, ordering, checkpoint/resume) is DataFrame-level.
+
+Importing the package installs ``worker_setup``'s guard once per process, so
+a Python worker that runs our tasks stops re-reading unchanged zip archives
+at every task's set-up.
 """
+
+from univer_ocr_spark import worker_setup as _worker_setup
+
+_worker_setup.install()
 
 EXTRACTION_VERSION = "1.1.0"  # r3: spanning-block column splitting + numeric char refs
 

@@ -2,6 +2,12 @@
 (BASELINE.json north_star). ``get_spark`` ships the zip automatically via
 ``addPyFile`` so Python workers can import the package regardless of cwd —
 the local-mode equivalent of distributing it to a 1000-executor cluster.
+
+``build_zip`` writes a temporary file and ``os.replace``s it over the
+destination, so a rebuilt zip has a new inode and mtime. ``worker_setup``'s
+guard keys each archive by ``(st_ino, st_size, st_mtime_ns)``, so a process
+that imported from the old zip re-reads the new one at its next
+``importlib.invalidate_caches()``.
 """
 
 from __future__ import annotations

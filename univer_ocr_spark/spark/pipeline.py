@@ -10,9 +10,11 @@ the nested text result becomes (extracted_text, spans) columns.
 Scale design (SURVEY.md X14 — the one thing the reference lacks):
 - extraction is row-local, so the hot path has no shuffle:
   ``run_extraction`` only merges small scan splits (a narrow ``coalesce``)
-  into byte-sized tasks, because every Python task pays a fixed set-up
-  cost before it reads a row. Nothing is keyed by ``conv_id``, so there is
-  no key skew for a mega-conversation to cause;
+  into byte-sized tasks, because every Python task still pays a fixed
+  set-up cost before it reads a row (its former largest part, the zip
+  directory re-reads, is paid once per worker: ``worker_setup``). Nothing
+  is keyed by ``conv_id``, so there is no key skew for a mega-conversation
+  to cause;
 - per-conversation aggregates are one ``groupBy``: Spark's partial
   aggregation sends a reducer one row per conversation per map task, so a
   10^4-turn mega-conversation cannot serialize one reducer;
@@ -141,10 +143,13 @@ def run_extraction(df: DataFrame, drop_payload: bool = False) -> DataFrame:
 
     No shuffle: input partitions are merged with a narrow ``coalesce`` down
     to ``max(cores, ceil(estimated bytes / advisory partition size))``
-    tasks. Each Python task pays a fixed set-up cost before its first row,
-    so small scan splits are merged while splits already larger than the
-    advisory size stay as they are. Tasks are sized by bytes, not keyed by
-    ``conv_id``, so a mega-conversation weighs on a task only by its bytes.
+    tasks. Each Python task still pays a fixed set-up cost before its first
+    row (~0.04 CPU-s, driver JVM included, on a reused worker of a 4-core
+    host, once ``worker_setup`` has made the zip-directory re-reads a
+    once-per-process cost), so small scan splits are merged while splits
+    already larger than the advisory size stay as they are. Tasks are sized
+    by bytes, not keyed by ``conv_id``, so a mega-conversation weighs on a
+    task only by its bytes.
     """
     out = extract_stage(df.coalesce(_byte_sized_partitions(df)),
                         drop_payload=drop_payload)

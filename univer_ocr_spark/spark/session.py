@@ -62,7 +62,9 @@ def get_spark(master: str | None = None, app_name: str = "univer_ocr_spark",
     spark.sparkContext.setLogLevel("WARN")
     # ship the package to Python workers (--py-files contract); without this
     # executors can only import univer_ocr_spark when cwd happens to be the
-    # repo root
+    # repo root. A worker's first import of the package installs
+    # worker_setup's guard, so its later tasks skip re-reading the unchanged
+    # pyspark/spark-core/package zips at set-up.
     from univer_ocr_spark.packaging import ship_package
 
     ship_package(spark)
