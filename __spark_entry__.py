@@ -2,9 +2,13 @@
 
 ``entry(spark)`` — flagship: run the real extraction pipeline over HTML
 payloads built from sf0.001 documents. ``queries()`` / ``oracle_sql()`` —
-one entry per implemented operator (SURVEY.md §2); the driver compares each
-Spark result against its DuckDB oracle at sf0.01 (row count + schema +
-order-insensitive value hash).
+one entry per implemented operator (SURVEY.md §2), both read from ONE
+table, ``OPERATORS``, of ``(name, query, oracle SQL)`` rows, so each query
+sits next to its oracle (the reference keeps each decode next to its oracle
+route, ref: web_app/views/main.py:88-99). Each Spark result is checked
+against its DuckDB oracle at sf0.01 (row count + schema +
+order-insensitive value hash). Every query ships the package first
+(``packaging.ship_package``, a no-op once the session's SparkContext has it).
 
 Column names and integer widths are aligned on both sides (Spark casts
 int→long where DuckDB returns BIGINT); float aggregates are rounded
@@ -23,6 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from univer_ocr_spark.ops import dedup, extract_docs, multimodal, relational, similarity, textstats  # noqa: E402
 
+Query = Callable[[SparkSession, str], DataFrame]
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: HTML-wrap documents, run
@@ -33,7 +39,7 @@ def entry(spark: SparkSession) -> DataFrame:
     return extract_docs.extract_html_docs(spark, "/root/testdata/sf0.001")
 
 
-def _with_pkg(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
+def _with_pkg(fn: Query) -> Query:
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         from univer_ocr_spark.packaging import ship_package
 
@@ -172,88 +178,129 @@ def _conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    qs: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        "transcripts_extract": _with_pkg(_transcripts_extract),
-        "conv_dedup": _with_pkg(_conv_dedup),
-        "extraction_qa": _with_pkg(_extraction_qa),
-        "transcripts_extract_summary": _with_pkg(_transcripts_extract_summary),
-        "extract_html_attr_docs": _with_pkg(extract_docs.extract_html_attr_docs),
-        "extract_html_entities_docs": _with_pkg(extract_docs.extract_html_entities_docs),
-        "extract_html_br_docs": _with_pkg(extract_docs.extract_html_br_docs),
-        "extract_markup_collapse_docs": _with_pkg(extract_docs.extract_markup_collapse_docs),
-        "multimodal_features": _with_pkg(multimodal.multimodal_features),
-        "q_user_median_pandas": _with_pkg(relational.q_user_median_pandas),
-        "q_order_priority": relational.q_order_priority,
-        "q_nearest_event_pair": relational.q_nearest_event_pair,
-        "q_monthly_revenue": relational.q_monthly_revenue,
-        "q_set_ops": relational.q_set_ops,
-        "q_pivot_returnflag": relational.q_pivot_returnflag,
-        "q_rollup_counts": relational.q_rollup_counts,
-        "q_events_within_hour": relational.q_events_within_hour,
-        "q_acctbal_histogram": relational.q_acctbal_histogram,
-        "q3_shipping_priority": relational.q3_shipping_priority,
-        "q_supplier_extremes": relational.q_supplier_extremes,
-        "doc_top_terms": textstats.doc_top_terms,
-        "q_sessionize_events": relational.q_sessionize_events,
-        "q_running_user_value": relational.q_running_user_value,
-        "q_asof_join": relational.q_asof_join,
-        "doc_repetition_stats": textstats.doc_repetition_stats,
-        # dedup family
-        "dedup_exact": dedup.dedup_exact,
-        "minhash_signatures": dedup.minhash_signatures,
-        "minhash_lsh_pairs": dedup.minhash_lsh_pairs,
-        "ngram_jaccard_pairs": dedup.ngram_jaccard_pairs,
-        "lsh_verified_pairs": dedup.lsh_verified_pairs,
-        "neardup_clusters": dedup.neardup_clusters,
-        "simhash_signatures": dedup.simhash_signatures,
-        "simhash_signatures_w96": lambda spark, sf_dir: dedup.simhash_signatures_wide(spark, sf_dir, 96),
-        "simhash_neardup_pairs": dedup.simhash_neardup_pairs,
-        "simhash_neardup_pairs_w96": lambda spark, sf_dir: dedup.simhash_neardup_pairs_wide(spark, sf_dir, 96),
-        # similarity search
-        "ann_bruteforce_topk": similarity.ann_bruteforce_topk,
-        "ann_lsh_topk": similarity.ann_lsh_topk,
-        "ann_ivf_topk": similarity.ann_ivf_topk,
-        "ann_ivf_scaled_topk": similarity.ann_ivf_scaled_topk,
-        "embedding_cosine_neardup": similarity.embedding_cosine_neardup,
-        "embedding_label_centroids": similarity.embedding_label_centroids,
-        # multimodal binary-column plumbing
-        "multimodal_meta": multimodal.multimodal_meta,
-    }
-    # extraction queries run the Python extraction stage → need the package
-    # shipped to Python workers
-    qs.update(
-        {
-            "extract_html_docs": _with_pkg(extract_docs.extract_html_docs),
-            "extract_markup_docs": _with_pkg(extract_docs.extract_markup_docs),
-            "extract_pdfish_docs": _with_pkg(extract_docs.extract_pdfish_docs),
-            "extract_pdfish_columns_docs": _with_pkg(extract_docs.extract_pdfish_columns_docs),
-            "extract_pdfish_title_docs": _with_pkg(extract_docs.extract_pdfish_title_docs),
-            "extract_pdfish_overlap_docs": _with_pkg(extract_docs.extract_pdfish_overlap_docs),
-            # glyph-height split of a mixed-height spanning run
-            "extract_pdfish_heights_docs": _with_pkg(extract_docs.extract_pdfish_heights_docs),
-            "extract_html_blocks_docs": _with_pkg(extract_docs.extract_html_blocks_docs),
-        }
-    )
-    qs.update(
-        {
-            "q1_pricing_summary": relational.q1_pricing_summary,
-            "q_revenue_by_nation": relational.q_revenue_by_nation,
-            "q_topk_parts": relational.q_topk_parts,
-            "q17_small_qty_revenue": relational.q17_small_qty_revenue,
-            # exact median: JVM production twin of q_user_median_pandas
-            "q_user_median": relational.q_user_median,
-            "doc_token_stats": textstats.doc_token_stats,
-            "doc_lang_heuristic": textstats.doc_lang_heuristic,
-            "doc_quality_score": textstats.doc_quality_score,
-            "doc_fingerprint": textstats.doc_fingerprint,
-            "doc_ngram_mode": textstats.doc_ngram_mode,
-            "doc_sample_deterministic": textstats.doc_sample_deterministic,
-            "doc_quality_filter": textstats.doc_quality_filter,
-            "doc_pii_redact": textstats.doc_pii_redact,
-        }
-    )
-    return qs
+# One row per operator: (name, query, DuckDB oracle), in queries() order.
+# An oracle is SQL text or, where the text is generated (K-wide, or sized
+# from the sf0.01 corpus), a function that returns it; oracle_sql() fills
+# in ``{goldens}``, the golden parquet path.
+#
+# The four transcript oracles all derive from the materialized golden
+# parquet (generator/goldens.py) — no hand-maintained constants; a
+# generator change re-materializes and the oracles follow.
+# n_matching/n_text_match are stated as count(*): every turn must match its
+# golden.
+OPERATORS: list[tuple[str, Query, str | Callable[[], str]]] = [
+    ("transcripts_extract", _transcripts_extract, (
+        "SELECT conv_id, turn_idx, kind, n_units, n_spans, n_chars,"
+        " text_md5, spans_str"
+        " FROM read_parquet('{goldens}')"
+        " ORDER BY conv_id, turn_idx"
+    )),
+    ("conv_dedup", _conv_dedup, (
+        "WITH d AS (SELECT conv_id, turn_idx, text_md5 AS td"
+        " FROM read_parquet('{goldens}')),\n"
+        "alls AS (SELECT * FROM d UNION ALL\n"
+        "         SELECT conv_id || '-copy', turn_idx, td FROM d"
+        " WHERE conv_id <= 'conv-00000004'),\n"
+        "fp AS (SELECT conv_id,"
+        " md5(string_agg(td, ',' ORDER BY turn_idx)) AS conv_fp\n"
+        "       FROM alls GROUP BY conv_id)\n"
+        "SELECT conv_id, conv_fp,\n"
+        "       min(conv_id) OVER (PARTITION BY conv_fp) AS canonical_conv,\n"
+        "       conv_id <> min(conv_id) OVER (PARTITION BY conv_fp) AS is_dup\n"
+        "FROM fp ORDER BY conv_id"
+    )),
+    ("extraction_qa", _extraction_qa, (
+        "SELECT kind, CAST(count(*) AS BIGINT) AS n_turns,"
+        " CAST(sum(CASE WHEN n_units = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_empty,"
+        " CAST(count(*) AS BIGINT) AS n_text_match,"
+        " CAST(sum(n_spans) AS BIGINT) AS total_spans"
+        " FROM read_parquet('{goldens}')"
+        " GROUP BY kind ORDER BY kind"
+    )),
+    ("transcripts_extract_summary", _transcripts_extract_summary, (
+        "SELECT CAST(count(*) AS BIGINT) AS n_turns,"
+        " CAST(count(*) AS BIGINT) AS n_matching,"
+        " CAST(sum(n_units) AS BIGINT) AS total_units,"
+        " CAST(sum(n_spans) AS BIGINT) AS total_spans,"
+        " CAST(sum(n_chars) AS BIGINT) AS total_chars"
+        " FROM read_parquet('{goldens}')"
+    )),
+    ("extract_html_attr_docs", extract_docs.extract_html_attr_docs, extract_docs.EXTRACT_HTML_ATTR_SQL),
+    ("extract_html_entities_docs", extract_docs.extract_html_entities_docs,
+     extract_docs.EXTRACT_HTML_ENTITIES_SQL),
+    ("extract_html_br_docs", extract_docs.extract_html_br_docs, extract_docs.EXTRACT_HTML_BR_SQL),
+    ("extract_markup_collapse_docs", extract_docs.extract_markup_collapse_docs,
+     extract_docs.EXTRACT_MARKUP_COLLAPSE_SQL),
+    ("multimodal_features", multimodal.multimodal_features, multimodal.MULTIMODAL_FEATURES_SQL),
+    ("q_user_median_pandas", relational.q_user_median_pandas, relational.Q_USER_MEDIAN_SQL),
+    ("q_order_priority", relational.q_order_priority, relational.Q_ORDER_PRIORITY_SQL),
+    ("q_nearest_event_pair", relational.q_nearest_event_pair, relational.Q_NEAREST_SQL),
+    ("q_monthly_revenue", relational.q_monthly_revenue, relational.Q_MONTHLY_REVENUE_SQL),
+    ("q_set_ops", relational.q_set_ops, relational.Q_SET_OPS_SQL),
+    ("q_pivot_returnflag", relational.q_pivot_returnflag, relational.Q_PIVOT_SQL),
+    ("q_rollup_counts", relational.q_rollup_counts, relational.Q_ROLLUP_SQL),
+    ("q_events_within_hour", relational.q_events_within_hour, relational.Q_EVENTS_WITHIN_HOUR_SQL),
+    ("q_acctbal_histogram", relational.q_acctbal_histogram, relational.Q_ACCTBAL_HISTOGRAM_SQL),
+    ("q3_shipping_priority", relational.q3_shipping_priority, relational.Q3_SQL),
+    ("q_supplier_extremes", relational.q_supplier_extremes, relational.Q_SUPPLIER_EXTREMES_SQL),
+    ("doc_top_terms", textstats.doc_top_terms, textstats.DOC_TOP_TERMS_SQL),
+    ("q_sessionize_events", relational.q_sessionize_events, relational.Q_SESSIONIZE_SQL),
+    ("q_running_user_value", relational.q_running_user_value, relational.Q_RUNNING_SQL),
+    ("q_asof_join", relational.q_asof_join, relational.Q_ASOF_SQL),
+    ("doc_repetition_stats", textstats.doc_repetition_stats, textstats.DOC_REPETITION_SQL),
+    # dedup family
+    ("dedup_exact", dedup.dedup_exact, dedup.DEDUP_EXACT_SQL),
+    ("minhash_signatures", dedup.minhash_signatures, dedup.minhash_signatures_sql),
+    ("minhash_lsh_pairs", dedup.minhash_lsh_pairs, dedup.minhash_lsh_pairs_sql),
+    ("ngram_jaccard_pairs", dedup.ngram_jaccard_pairs, dedup.NGRAM_JACCARD_SQL),
+    ("lsh_verified_pairs", dedup.lsh_verified_pairs, dedup.LSH_VERIFIED_PAIRS_SQL),
+    ("neardup_clusters", dedup.neardup_clusters, dedup.NEARDUP_CLUSTERS_SQL),
+    ("simhash_signatures", dedup.simhash_signatures, dedup.simhash_signatures_sql),
+    ("simhash_signatures_w96", lambda spark, sf_dir: dedup.simhash_signatures_wide(spark, sf_dir, 96),
+     lambda: dedup.simhash_signatures_wide_sql(96)),
+    ("simhash_neardup_pairs", dedup.simhash_neardup_pairs, dedup.simhash_neardup_pairs_sql),
+    ("simhash_neardup_pairs_w96", lambda spark, sf_dir: dedup.simhash_neardup_pairs_wide(spark, sf_dir, 96),
+     lambda: dedup.simhash_neardup_pairs_wide_sql(96)),
+    # similarity search
+    ("ann_bruteforce_topk", similarity.ann_bruteforce_topk, similarity.ANN_BRUTEFORCE_SQL),
+    ("ann_lsh_topk", similarity.ann_lsh_topk, similarity.ann_lsh_sql),
+    ("ann_ivf_topk", similarity.ann_ivf_topk, similarity.ANN_IVF_SQL),
+    ("ann_ivf_scaled_topk", similarity.ann_ivf_scaled_topk, similarity.ann_ivf_scaled_sql),
+    ("embedding_cosine_neardup", similarity.embedding_cosine_neardup, similarity.EMBEDDING_NEARDUP_SQL),
+    ("embedding_label_centroids", similarity.embedding_label_centroids, similarity.CENTROIDS_SQL),
+    # multimodal binary-column plumbing
+    ("multimodal_meta", multimodal.multimodal_meta, multimodal.MULTIMODAL_META_SQL),
+    ("extract_html_docs", extract_docs.extract_html_docs, extract_docs.EXTRACT_HTML_DOCS_SQL),
+    ("extract_markup_docs", extract_docs.extract_markup_docs, extract_docs.EXTRACT_MARKUP_DOCS_SQL),
+    ("extract_pdfish_docs", extract_docs.extract_pdfish_docs, extract_docs.EXTRACT_PDFISH_DOCS_SQL),
+    ("extract_pdfish_columns_docs", extract_docs.extract_pdfish_columns_docs,
+     extract_docs.EXTRACT_PDFISH_COLUMNS_SQL),
+    ("extract_pdfish_title_docs", extract_docs.extract_pdfish_title_docs, extract_docs.EXTRACT_PDFISH_TITLE_SQL),
+    ("extract_pdfish_overlap_docs", extract_docs.extract_pdfish_overlap_docs,
+     extract_docs.EXTRACT_PDFISH_OVERLAP_SQL),
+    # glyph-height split of a mixed-height spanning run
+    ("extract_pdfish_heights_docs", extract_docs.extract_pdfish_heights_docs,
+     extract_docs.EXTRACT_PDFISH_HEIGHTS_SQL),
+    ("extract_html_blocks_docs", extract_docs.extract_html_blocks_docs, extract_docs.EXTRACT_HTML_BLOCKS_SQL),
+    ("q1_pricing_summary", relational.q1_pricing_summary, relational.Q1_SQL),
+    ("q_revenue_by_nation", relational.q_revenue_by_nation, relational.Q_REVENUE_BY_NATION_SQL),
+    ("q_topk_parts", relational.q_topk_parts, relational.Q_TOPK_PARTS_SQL),
+    ("q17_small_qty_revenue", relational.q17_small_qty_revenue, relational.Q17_SQL),
+    # exact median: JVM production twin of q_user_median_pandas
+    ("q_user_median", relational.q_user_median, relational.Q_USER_MEDIAN_SQL),
+    ("doc_token_stats", textstats.doc_token_stats, textstats.DOC_TOKEN_STATS_SQL),
+    ("doc_lang_heuristic", textstats.doc_lang_heuristic, textstats.doc_lang_oracle_sql),
+    ("doc_quality_score", textstats.doc_quality_score, textstats.DOC_QUALITY_SQL),
+    ("doc_fingerprint", textstats.doc_fingerprint, textstats.DOC_FINGERPRINT_SQL),
+    ("doc_ngram_mode", textstats.doc_ngram_mode, textstats.DOC_NGRAM_MODE_SQL),
+    ("doc_sample_deterministic", textstats.doc_sample_deterministic, textstats.DOC_SAMPLE_SQL),
+    ("doc_quality_filter", textstats.doc_quality_filter, textstats.doc_quality_filter_sql),
+    ("doc_pii_redact", textstats.doc_pii_redact, textstats.DOC_PII_REDACT_SQL),
+]
+
+
+def queries() -> dict[str, Query]:
+    return {name: _with_pkg(query) for name, query, _ in OPERATORS}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -262,105 +309,5 @@ def oracle_sql() -> dict[str, str]:
     # materialized on first call (pure Python, ~1s, cached by generator hash)
     goldens = goldens_parquet(n_convs=N_CONVS, mega_conv_count=MEGA_COUNT,
                               mega_conv_size=MEGA_SIZE)
-    return {
-        "q1_pricing_summary": relational.Q1_SQL,
-        "q_revenue_by_nation": relational.Q_REVENUE_BY_NATION_SQL,
-        "q_topk_parts": relational.Q_TOPK_PARTS_SQL,
-        "q_asof_join": relational.Q_ASOF_SQL,
-        "q_order_priority": relational.Q_ORDER_PRIORITY_SQL,
-        "q_sessionize_events": relational.Q_SESSIONIZE_SQL,
-        "q_running_user_value": relational.Q_RUNNING_SQL,
-        "q_nearest_event_pair": relational.Q_NEAREST_SQL,
-        "q_monthly_revenue": relational.Q_MONTHLY_REVENUE_SQL,
-        "q_set_ops": relational.Q_SET_OPS_SQL,
-        "q_pivot_returnflag": relational.Q_PIVOT_SQL,
-        "q_rollup_counts": relational.Q_ROLLUP_SQL,
-        "q_events_within_hour": relational.Q_EVENTS_WITHIN_HOUR_SQL,
-        "q_acctbal_histogram": relational.Q_ACCTBAL_HISTOGRAM_SQL,
-        "q3_shipping_priority": relational.Q3_SQL,
-        "q_supplier_extremes": relational.Q_SUPPLIER_EXTREMES_SQL,
-        "q17_small_qty_revenue": relational.Q17_SQL,
-        "q_user_median": relational.Q_USER_MEDIAN_SQL,
-        "q_user_median_pandas": relational.Q_USER_MEDIAN_SQL,
-        "doc_token_stats": textstats.DOC_TOKEN_STATS_SQL,
-        "doc_lang_heuristic": textstats.doc_lang_oracle_sql(),
-        "doc_quality_score": textstats.DOC_QUALITY_SQL,
-        "doc_fingerprint": textstats.DOC_FINGERPRINT_SQL,
-        "doc_ngram_mode": textstats.DOC_NGRAM_MODE_SQL,
-        "doc_sample_deterministic": textstats.DOC_SAMPLE_SQL,
-        "doc_quality_filter": textstats.doc_quality_filter_sql(),
-        "doc_top_terms": textstats.DOC_TOP_TERMS_SQL,
-        "doc_pii_redact": textstats.DOC_PII_REDACT_SQL,
-        "doc_repetition_stats": textstats.DOC_REPETITION_SQL,
-        "dedup_exact": dedup.DEDUP_EXACT_SQL,
-        "minhash_signatures": dedup.minhash_signatures_sql(),
-        "minhash_lsh_pairs": dedup.minhash_lsh_pairs_sql(),
-        "ngram_jaccard_pairs": dedup.NGRAM_JACCARD_SQL,
-        "lsh_verified_pairs": dedup.LSH_VERIFIED_PAIRS_SQL,
-        "neardup_clusters": dedup.NEARDUP_CLUSTERS_SQL,
-        "simhash_signatures": dedup.simhash_signatures_sql(),
-        "simhash_signatures_w96": dedup.simhash_signatures_wide_sql(96),
-        "simhash_neardup_pairs": dedup.simhash_neardup_pairs_sql(),
-        "simhash_neardup_pairs_w96": dedup.simhash_neardup_pairs_wide_sql(96),
-        "ann_bruteforce_topk": similarity.ANN_BRUTEFORCE_SQL,
-        "ann_lsh_topk": similarity.ann_lsh_sql(),
-        "ann_ivf_topk": similarity.ANN_IVF_SQL,
-        "ann_ivf_scaled_topk": similarity.ann_ivf_scaled_sql(),
-        "embedding_cosine_neardup": similarity.EMBEDDING_NEARDUP_SQL,
-        "embedding_label_centroids": similarity.CENTROIDS_SQL,
-        "multimodal_meta": multimodal.MULTIMODAL_META_SQL,
-        "extract_html_docs": extract_docs.EXTRACT_HTML_DOCS_SQL,
-        "extract_markup_docs": extract_docs.EXTRACT_MARKUP_DOCS_SQL,
-        "extract_pdfish_docs": extract_docs.EXTRACT_PDFISH_DOCS_SQL,
-        "extract_pdfish_columns_docs": extract_docs.EXTRACT_PDFISH_COLUMNS_SQL,
-        "extract_pdfish_title_docs": extract_docs.EXTRACT_PDFISH_TITLE_SQL,
-        "extract_pdfish_overlap_docs": extract_docs.EXTRACT_PDFISH_OVERLAP_SQL,
-        "extract_pdfish_heights_docs": extract_docs.EXTRACT_PDFISH_HEIGHTS_SQL,
-        "extract_html_blocks_docs": extract_docs.EXTRACT_HTML_BLOCKS_SQL,
-        "extract_html_attr_docs": extract_docs.EXTRACT_HTML_ATTR_SQL,
-        "extract_html_entities_docs": extract_docs.EXTRACT_HTML_ENTITIES_SQL,
-        "extract_html_br_docs": extract_docs.EXTRACT_HTML_BR_SQL,
-        "extract_markup_collapse_docs": extract_docs.EXTRACT_MARKUP_COLLAPSE_SQL,
-        "multimodal_features": multimodal.MULTIMODAL_FEATURES_SQL,
-        # The three transcript oracles all derive from the materialized
-        # golden parquet (generator/goldens.py) — no hand-maintained
-        # constants; a generator change re-materializes and the oracles
-        # follow. n_matching/n_text_match are stated as count(*): every
-        # turn must match its golden.
-        "conv_dedup": (
-            "WITH d AS (SELECT conv_id, turn_idx, text_md5 AS td"
-            f" FROM read_parquet('{goldens}')),\n"
-            "alls AS (SELECT * FROM d UNION ALL\n"
-            "         SELECT conv_id || '-copy', turn_idx, td FROM d"
-            " WHERE conv_id <= 'conv-00000004'),\n"
-            "fp AS (SELECT conv_id,"
-            " md5(string_agg(td, ',' ORDER BY turn_idx)) AS conv_fp\n"
-            "       FROM alls GROUP BY conv_id)\n"
-            "SELECT conv_id, conv_fp,\n"
-            "       min(conv_id) OVER (PARTITION BY conv_fp) AS canonical_conv,\n"
-            "       conv_id <> min(conv_id) OVER (PARTITION BY conv_fp) AS is_dup\n"
-            "FROM fp ORDER BY conv_id"
-        ),
-        "transcripts_extract": (
-            "SELECT conv_id, turn_idx, kind, n_units, n_spans, n_chars,"
-            " text_md5, spans_str"
-            f" FROM read_parquet('{goldens}')"
-            " ORDER BY conv_id, turn_idx"
-        ),
-        "extraction_qa": (
-            "SELECT kind, CAST(count(*) AS BIGINT) AS n_turns,"
-            " CAST(sum(CASE WHEN n_units = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_empty,"
-            " CAST(count(*) AS BIGINT) AS n_text_match,"
-            " CAST(sum(n_spans) AS BIGINT) AS total_spans"
-            f" FROM read_parquet('{goldens}')"
-            " GROUP BY kind ORDER BY kind"
-        ),
-        "transcripts_extract_summary": (
-            "SELECT CAST(count(*) AS BIGINT) AS n_turns,"
-            " CAST(count(*) AS BIGINT) AS n_matching,"
-            " CAST(sum(n_units) AS BIGINT) AS total_units,"
-            " CAST(sum(n_spans) AS BIGINT) AS total_spans,"
-            " CAST(sum(n_chars) AS BIGINT) AS total_chars"
-            f" FROM read_parquet('{goldens}')"
-        ),
-    }
+    return {name: (sql if isinstance(sql, str) else sql()).replace("{goldens}", goldens)
+            for name, _, sql in OPERATORS}

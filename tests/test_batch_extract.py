@@ -125,15 +125,15 @@ def test_payload_builder_runs_per_batch(spark):
     def build(batch):
         n = batch.num_rows
         return [None if w is None else f"{w} of {n}"
-                for w in batch.column("word").to_pylist()]
+                for w in batch.column("text").to_pylist()]
 
     words = [f"w{i}" if i % 4 else None for i in range(10)]
-    df = spark.createDataFrame(list(enumerate(words)), "id bigint, word string").coalesce(1)
+    df = spark.createDataFrame(list(enumerate(words)), "id bigint, text string").coalesce(1)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "3")
     try:
-        out = extract_stage(df, payload_col="word", drop_payload=True, build_payloads=build)
+        out = extract_stage(df, drop_payload=True, build_payloads=build)
         rows = sorted(out.collect(), key=lambda r: r["id"])
     finally:
         spark.conf.set(key, old)

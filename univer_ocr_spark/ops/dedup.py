@@ -92,16 +92,15 @@ def _min_est_matches(threshold: float = JACCARD_THRESHOLD,
 MIN_EST_MATCHES = _min_est_matches()
 
 
-def _est_sum_sql(term, n: int = None, chunk: int = 32) -> str:
-    """Σ over k of CAST(<term(k)> AS BIGINT), parenthesized in chunks of
-    ``chunk``: a flat 255-term '+' chain nests 255 levels deep and blows
+def _est_sum_sql(term) -> str:
+    """Σ over k < MINHASH_K of CAST(<term(k)> AS BIGINT), parenthesized in
+    chunks of 32: a flat 255-term '+' chain nests 255 levels deep and blows
     DuckDB's binder recursion limit (128); chunking keeps the expression
-    tree ≤ chunk+n/chunk deep on both engines."""
-    n = MINHASH_K if n is None else n
+    tree ≤ 32+K/32 deep on both engines."""
     chunks = []
-    for lo in range(0, n, chunk):
+    for lo in range(0, MINHASH_K, 32):
         terms = " + ".join(
-            f"CAST({term(k)} AS BIGINT)" for k in range(lo, min(lo + chunk, n))
+            f"CAST({term(k)} AS BIGINT)" for k in range(lo, min(lo + 32, MINHASH_K))
         )
         chunks.append(f"({terms})")
     return "(" + " + ".join(chunks) + ")"
@@ -177,6 +176,13 @@ _SHINGLES_SQL = f"""
 """
 
 
+def _shingles_of(d: DataFrame) -> DataFrame:
+    """One (doc_id, shingle) row per word 2-gram of each doc's normalized text."""
+    toked = d.select("doc_id", F.split(_norm(F.col("text")), " ").alias("toks"))
+    return toked.select(
+        "doc_id", F.explode(_word_shingles_from_toks(F.col("toks"))).alias("shingle"))
+
+
 def _exploded_shingles(spark: SparkSession, sf_dir: str,
                        distinct: bool = True) -> DataFrame:
     # documents at test scale is one small parquet file = one partition; the
@@ -191,14 +197,7 @@ def _exploded_shingles(spark: SparkSession, sf_dir: str,
     # aggregate sits directly on top of it, but a persist()/checkpoint
     # boundary between them (the verified-pairs pipeline) defeats the rule —
     # the explicit flag makes the plan shape independent of that.
-    d = _docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
-    toked = d.select(
-        "doc_id", F.split(_norm(F.col("text")), " ").alias("toks")
-    )
-    ex = toked.select(
-        "doc_id",
-        F.explode(_word_shingles_from_toks(F.col("toks"))).alias("shingle"),
-    )
+    ex = _shingles_of(_docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism))
     return ex.distinct() if distinct else ex
 
 
@@ -593,15 +592,9 @@ def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(survivors.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    d = _docs(spark, sf_dir).join(F.broadcast(surv_docs), "doc_id", "left_semi")
-    toked = d.select("doc_id", F.split(_norm(F.col("text")), " ").alias("toks"))
-    ex = (
-        toked.select(
-            "doc_id",
-            F.explode(_word_shingles_from_toks(F.col("toks"))).alias("shingle"),
-        )
-        .distinct()
-    )
+    ex = _shingles_of(
+        _docs(spark, sf_dir).join(F.broadcast(surv_docs), "doc_id", "left_semi")
+    ).distinct()
     a = ex.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = ex.select(F.col("doc_id").alias("doc_b"), "shingle")
     shared = (
@@ -646,8 +639,7 @@ LSH_VERIFIED_PAIRS_SQL = (
 )
 
 
-def _min_label_cc(nodes: DataFrame, edges: DataFrame,
-                  max_rounds: int | None = None) -> tuple[DataFrame, int]:
+def _min_label_cc(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, int]:
     """Connected components by min-label propagation with pointer jumping.
 
     ``nodes``: (doc_id); ``edges``: (src, dst), must be symmetric. Each
@@ -659,8 +651,8 @@ def _min_label_cc(nodes: DataFrame, edges: DataFrame,
     diameter-bounded — chain-shaped near-dup clusters from templated spam
     made that the scale risk). Labels only decrease and label(x) is always
     a node of x's component, so the loop reaches the SAME unique fixpoint
-    (component min) as the oracle's recursive flood; ``max_rounds`` exists
-    only for tests/debugging. Returns ``(labels, rounds_to_fixpoint)``.
+    (component min) as the oracle's recursive flood. Returns
+    ``(labels, rounds_to_fixpoint)``.
     The reference analog is the region labeling A1 (ref: interpreter.py:16-21).
     """
     # localCheckpoint (not persist): iterative self-joins grow the logical
@@ -669,7 +661,7 @@ def _min_label_cc(nodes: DataFrame, edges: DataFrame,
     labels = nodes.select("doc_id", F.col("doc_id").alias("label")).localCheckpoint()
     edges = edges.localCheckpoint()
     rounds = 0
-    while max_rounds is None or rounds < max_rounds:
+    while True:
         rounds += 1
         nbr = (
             edges.join(labels, edges["src"] == labels["doc_id"])
@@ -820,10 +812,11 @@ def simhash_signatures_wide(
     sim_0..sim_{w/32-1}, least-significant half first."""
     assert width % _HALF == 0 and 0 < width <= 128
     n = width // _HALF
-    ex = _exploded_shingles(spark, sf_dir)
-    ex.createOrReplaceTempView("shingled")
     exprs = [_h32_sql_spark("shingle", 1 + 8 * i) for i in range(n)]
-    return spark.sql(_simhash_select_wide(exprs))
+    # the shingles bind to this one query (spark.sql drops the bound view
+    # after analysis), named by a CTE as in the DuckDB twin: no session view
+    sql = "WITH shingled AS (SELECT * FROM {ex}),\n" + _simhash_select_wide(exprs)[5:]
+    return spark.sql(sql, ex=_exploded_shingles(spark, sf_dir))
 
 
 def simhash_signatures_wide_sql(width: int = 96) -> str:
@@ -854,15 +847,13 @@ def simhash_signatures_sql() -> str:
 
 
 def simhash_neardup_pairs_wide(
-    spark: SparkSession, sf_dir: str, width: int = 96,
-    hamming_max: int | None = None,
+    spark: SparkSession, sf_dir: str, width: int = 96
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ ``hamming_max``.
+    """Near-dup pairs by SimHash Hamming distance ≤ bands-1.
 
     Scale shape: width/16 bands of 16 bits (2 per half); candidates are
     docs sharing a band value (bucket_pairs), so by pigeonhole every pair
-    within the default ``hamming_max = bands-1`` flipped bits shares >= 1
-    untouched band — exact recall, never all-pairs; the popcount verify
+    within bands-1 flipped bits shares >= 1 untouched band — exact recall, never all-pairs; the popcount verify
     runs only on candidates. The banded-Hamming trick is the standard
     large-scale simhash dedup plan (Manku et al., WWW'07 — public
     literature). Per-band bucket entropy stays 2^16 (the r2 8-bit keys
@@ -870,8 +861,6 @@ def simhash_neardup_pairs_wide(
     widening the signature multiplies the band count (more candidate
     tables, same occupancy)."""
     n = width // _HALF
-    if hamming_max is None:
-        hamming_max = 2 * n - 1
     sim_cols = [f"sim_{i}" for i in range(n)]
     # localCheckpoint: the signatures feed the banding AND both Hamming
     # sides — without the barrier the bit-vote aggregate runs three times
@@ -901,19 +890,16 @@ def simhash_neardup_pairs_wide(
         .join(a, "doc_a")
         .join(b, "doc_b")
         .withColumn("hamming", F.expr(f"CAST({ham} AS BIGINT)"))
-        .filter(F.col("hamming") <= hamming_max)
+        .filter(F.col("hamming") <= 2 * n - 1)
         .select("doc_a", "doc_b", "hamming")
         .orderBy("doc_a", "doc_b")
     )
 
 
-def simhash_neardup_pairs_wide_sql(width: int = 96,
-                                   hamming_max: int | None = None) -> str:
+def simhash_neardup_pairs_wide_sql(width: int = 96) -> str:
     """DuckDB twin of simhash_neardup_pairs_wide (same banding/budget
     derivation)."""
     n = width // _HALF
-    if hamming_max is None:
-        hamming_max = 2 * n - 1
     sim_cols = ", ".join(f"sim_{i}" for i in range(n))
     band_rows = []
     for i in range(n):
@@ -939,7 +925,7 @@ def simhash_neardup_pairs_wide_sql(width: int = 96,
         f"       CAST({ham} AS BIGINT) AS hamming\n"
         "FROM banded a JOIN banded b\n"
         "  ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id\n"
-        f"WHERE {ham} <= {hamming_max}\n"
+        f"WHERE {ham} <= {2 * n - 1}\n"
         "ORDER BY doc_a, doc_b"
     )
 

@@ -15,20 +15,18 @@ from typing import Iterator, List
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from univer_ocr_spark.ops.dedup import _docs
+
 FEATURE_DIM = 8
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_binary_payload(df: DataFrame) -> DataFrame:
     """Attach an opaque binary payload column + typed metadata (stands in
-    for image/audio bytes; here the UTF-8 encoding of the text)."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8")).withColumn(
+    for image/audio bytes; here the UTF-8 encoding of ``text``)."""
+    return df.withColumn("payload", F.encode(F.col("text"), "UTF-8")).withColumn(
         "payload_meta",
         F.struct(
-            F.octet_length(F.col(text_col)).cast("long").alias("n_bytes"),
+            F.octet_length(F.col("text")).cast("long").alias("n_bytes"),
             F.lit("utf8-text").alias("format"),
         ),
     )

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from univer_ocr_spark.constants import WS_CLASS
+from univer_ocr_spark.ops.dedup import _docs, _norm, fingerprint_expr
 
 STOPWORDS = {
     "en": ("the", "and", "of", "to", "in", "is", "a", "for"),
@@ -23,13 +24,13 @@ STOPWORDS = {
 }
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def _tokens(col):
     # WS_CLASS, not \s — Java regex vs RE2 disagree on \x0B (see constants)
     return F.split(F.trim(col), WS_CLASS + "+")
+
+
+def _n_tokens(col):  # 0 for blank text, where split yields ['']
+    return F.when(F.length(F.trim(col)) == 0, F.lit(0)).otherwise(F.size(_tokens(col)))
 
 
 # BPE-ish pre-tokenizer regex (GPT-2-style run classes: letter runs, digit
@@ -46,9 +47,7 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         F.length("text").cast("long").alias("len_chars"),
-        F.when(F.length(F.trim("text")) == 0, F.lit(0))
-        .otherwise(F.size(toks)).cast("long")
-        .alias("n_tokens"),
+        _n_tokens(F.col("text")).cast("long").alias("n_tokens"),
         F.size(
             F.regexp_extract_all("text", F.lit(_BPEISH_RE), F.lit(0))
         ).cast("long").alias("n_bpeish_tokens"),
@@ -120,8 +119,7 @@ def doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring from length / punctuation / token-length signals
     (metric aggregate analog of F7/F8)."""
     d = _docs(spark, sf_dir)
-    toks = _tokens(F.col("text"))
-    n_tokens = F.when(F.length(F.trim("text")) == 0, F.lit(0)).otherwise(F.size(toks))
+    n_tokens = _n_tokens(F.col("text"))
     n_alpha = F.length(F.regexp_replace("text", r"[^a-zA-Z]", ""))
     n_punct = F.length(F.regexp_replace("text", r"[^.,!?;:]", ""))
     return d.select(
@@ -155,9 +153,8 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic content fingerprint: md5 of whitespace-normalized,
     lowercased text (portable across engines — both emit lowercase hex)."""
     d = _docs(spark, sf_dir)
-    norm = F.lower(F.regexp_replace(F.trim("text"), WS_CLASS + "+", " "))
     return d.select(
-        "doc_id", F.md5(F.encode(norm, "UTF-8")).alias("fingerprint")
+        "doc_id", fingerprint_expr(F.col("text")).alias("fingerprint")
     ).orderBy("doc_id")
 
 
@@ -174,8 +171,7 @@ def doc_ngram_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = _docs(spark, sf_dir)
-    norm = F.lower(F.regexp_replace(F.trim("text"), WS_CLASS + "+", " "))
-    d2 = d.select("doc_id", "lang", norm.alias("norm"))
+    d2 = d.select("doc_id", "lang", _norm(F.col("text")).alias("norm"))
     d2 = d2.filter(F.length("norm") >= 3).select(
         "lang",
         F.explode(
@@ -255,7 +251,7 @@ def doc_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = _docs(spark, sf_dir)
-    toks = F.split(F.trim(F.lower(F.col("text"))), WS_CLASS + "+")
+    toks = _tokens(F.lower(F.col("text")))
     terms = d.select("doc_id", F.explode(toks).alias("term")).filter(
         F.col("term") != ""
     )
@@ -313,12 +309,9 @@ def doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     failing rule as the recorded reason. One scan + one window shuffle."""
     from pyspark.sql import Window as W
 
-    from univer_ocr_spark.ops.dedup import fingerprint_expr
-
     d = _docs(spark, sf_dir)
     fp = fingerprint_expr(F.col("text"))
-    toks = _tokens(F.col("text"))
-    n_tokens = F.when(F.length(F.trim("text")) == 0, F.lit(0)).otherwise(F.size(toks))
+    n_tokens = _n_tokens(F.col("text"))
     lo = _tokens(F.lower(F.col("text")))
     hits = [
         F.size(F.filter(lo, lambda x: x.isin(*words)))

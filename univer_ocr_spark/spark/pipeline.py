@@ -55,8 +55,7 @@ EXTRA_FIELDS = [
 ]
 
 
-def extract_stage(df: DataFrame, payload_col: str = "text",
-                  drop_payload: bool = False,
+def extract_stage(df: DataFrame, drop_payload: bool = False,
                   build_payloads: Callable[["pa.RecordBatch"], List[str]] | None = None,
                   ) -> DataFrame:
     """Append extraction columns via one Arrow-batched ``mapInArrow`` stage.
@@ -69,8 +68,8 @@ def extract_stage(df: DataFrame, payload_col: str = "text",
 
     ``build_payloads`` (input batch → one payload string per row) runs
     inside the extraction batch function, so a query that synthesizes its
-    payloads still crosses into Python once; ``payload_col`` then names the
-    builder's input column, which ``drop_payload`` drops like a payload.
+    payloads still crosses into Python once; its input column is then
+    ``text``, which ``drop_payload`` drops like a payload.
 
     ``drop_payload=True`` excludes the raw payload from the OUTPUT batch —
     the extracted table should not duplicate input payloads, and at KB-scale
@@ -78,7 +77,7 @@ def extract_stage(df: DataFrame, payload_col: str = "text",
     cannot be column-pruned from above).
     """
     keep = [i for i, f in enumerate(df.schema.fields)
-            if not (drop_payload and f.name == payload_col)]
+            if not (drop_payload and f.name == "text")]
     out_fields = [df.schema.fields[i] for i in keep]
     out_schema = T.StructType(out_fields + EXTRA_FIELDS)
     names = [f.name for f in out_schema.fields]
@@ -89,7 +88,7 @@ def extract_stage(df: DataFrame, payload_col: str = "text",
 
         for batch in batches:
             payloads = (build_payloads(batch) if build_payloads
-                        else batch.column(payload_col).to_pylist())
+                        else batch.column("text").to_pylist())
             texts, spans_col, kinds = (
                 zip(*extract_payloads_batch(payloads)) if payloads else ((), (), ()))
             counts = np.fromiter(map(len, spans_col), np.int32, len(spans_col))
