@@ -10,10 +10,10 @@ partitions.
 
 Unit of work: a *bucket* = ``pmod(xxhash64(conv_id), n_buckets)`` —
 deterministic across runs and independent of physical partitioning. The
-input is bucketized ONCE (one shuffle, written ``partitionBy("bucket")``),
-then each bucket is processed as its own fully-parallel job off a
-partition-pruned scan; a manifest row commits after each bucket's output
-lands.
+input is bucketized ONCE (one shuffle, written ``partitionBy("bucket")``);
+a run reads that staged table once, with the schema it wrote, and each
+bucket is a partition filter on it. A manifest row commits after each
+bucket's output lands; the output has no payload column.
 
 Iceberg note: on a real cluster each bucket commit would be an Iceberg
 snapshot append (``df.writeTo(tbl).append()``) and the manifest would cite
@@ -29,6 +29,7 @@ import time
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from univer_ocr_spark import EXTRACTION_VERSION
 from univer_ocr_spark.spark.pipeline import run_extraction
@@ -87,14 +88,11 @@ def committed_buckets(spark: SparkSession, manifest_dir: str,
     like an Iceberg snapshot written by a superseded job."""
     if not os.path.exists(manifest_dir):
         return set()
-    try:
-        rows = (
-            spark.read.parquet(manifest_dir)
-            .select("bucket", "extraction_version", "input_snapshot")
-            .collect()
-        )
-    except Exception:  # noqa: BLE001 — empty/missing manifest = nothing committed
-        return set()
+    rows = (
+        spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
+        .select("bucket", "extraction_version", "input_snapshot")
+        .collect()
+    )
     return {
         r["bucket"]
         for r in rows
@@ -135,7 +133,8 @@ def _assert_bucket_partitioned(spark: SparkSession, table: str) -> None:
 def _iceberg_commit(out: DataFrame, table: str, bucket: int, n_rows: int) -> str:
     """Commit one bucket to an Iceberg table via the DataFrameWriterV2 API
     and return the resulting snapshot id (read back from the table's
-    snapshots metadata — the lineage the manifest row must cite).
+    snapshots metadata — the lineage the manifest row must cite). The sink
+    table has no payload column (``out`` is extracted without ``text``).
 
     ``overwritePartitions`` (not ``append``) keeps the resume contract
     idempotent: the table is partitioned by ``bucket``, so re-running a
@@ -185,13 +184,15 @@ def run_with_manifest(
     from prior runs are skipped — the resume contract). ``fail_after=k``
     injects a crash after k bucket commits (for the kill/resume test).
     A bucket's manifest row lands only after its output did, so a crash
-    mid-run resumes exactly.
+    mid-run resumes exactly. The sink table has no payload column.
     """
-    staged = os.path.join(workdir, "staged")
+    staged_dir = os.path.join(workdir, "staged")
     outdir = os.path.join(workdir, "extracted")
     manifest_dir = os.path.join(workdir, "manifest")
 
-    bucketize(spark, df, staged, n_buckets, input_snapshot)
+    bucketize(spark, df, staged_dir, n_buckets, input_snapshot)
+    staged = spark.read.schema(StructType(
+        df.schema.fields + [StructField("bucket", IntegerType())])).parquet(staged_dir)
     done = committed_buckets(spark, manifest_dir, EXTRACTION_VERSION,
                              input_snapshot)
     processed: List[int] = []
@@ -205,13 +206,10 @@ def run_with_manifest(
         if fail_after is not None and len(processed) >= fail_after:
             raise RuntimeError(f"injected failure after {fail_after} buckets")
         t0 = time.time()
-        bucket_dir = os.path.join(staged, f"bucket={b}")
-        if not os.path.exists(bucket_dir):
-            part = spark.createDataFrame([], df.schema)  # empty bucket
-        else:
-            part = spark.read.parquet(bucket_dir)
+        part = staged.filter(F.col("bucket") == b).drop("bucket")
         obs = Observation(f"bucket_{b}_rows_{int(t0 * 1e6)}")
-        out = run_extraction(part).observe(obs, F.count(F.lit(1)).alias("n"))
+        out = run_extraction(part, drop_payload=True).observe(
+            obs, F.count(F.lit(1)).alias("n"))
         if iceberg_table:
             # the row count picks overwritePartitions or DELETE
             # (_iceberg_commit); the persist stops the count and the commit
@@ -251,4 +249,5 @@ def read_output(spark: SparkSession, workdir: str) -> DataFrame:
 
 
 def read_manifest(spark: SparkSession, workdir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(workdir, "manifest"))
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(
+        os.path.join(workdir, "manifest"))

@@ -43,11 +43,8 @@ def get_spark(master: str | None = None, app_name: str = "univer_ocr_spark",
         # tables that outgrow it at larger corpus sizes fall back to
         # sort-merge automatically — the threshold is a cap, not a bet on n.
         # Applies to AQE's runtime conversion too (adaptive threshold
-        # defaults to this value). Override via SPARK_GRAFT_BROADCAST_MB.
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_BROADCAST_MB", "64") + "m",
-        )
+        # defaults to this value).
+        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # payloads are KB-scale strings: cap Arrow batches so a batch of

@@ -20,15 +20,13 @@ def stream_extract_parquet_dir(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    schema=None,
 ) -> None:
     """Run extraction over all files currently in ``input_dir`` (AvailableNow)
     and write results to ``output_dir``; blocks until drained.
 
     The checkpoint dir gives streaming's exactly-once file-sink semantics —
     the streaming twin of the batch manifest (spark/manifest.py)."""
-    if schema is None:
-        schema = spark.read.parquet(input_dir).schema
+    schema = spark.read.parquet(input_dir).schema
     src = spark.readStream.schema(schema).parquet(input_dir)
     out = extract_stage(src)
     q = (

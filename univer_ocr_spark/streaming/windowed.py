@@ -10,24 +10,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+# tumbling window shared by the stream and its batch twin; the watermark
+# admits events up to two windows late
+WINDOW = "1 hour"
+WATERMARK = "2 hours"
 
-def windowed_event_counts_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> None:
-    """Stream events → watermark → tumbling-window counts per event_type."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(input_dir).schema
-    src = spark.readStream.schema(schema).parquet(input_dir)
-    # watermarks need TIMESTAMP (tz-aware); parquet yields TIMESTAMP_NTZ
-    src = src.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+
+def _window_counts(ev: DataFrame) -> DataFrame:
+    """Tumbling-window counts and value totals per event_type."""
+    return (
+        ev.groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("total"))
         .select(
             F.col("w.start").alias("w_start"),
@@ -37,8 +29,23 @@ def windowed_event_counts_stream(
             "total",
         )
     )
+
+
+def windowed_event_counts_stream(
+    spark: SparkSession,
+    input_dir: str,
+    output_dir: str,
+    checkpoint_dir: str,
+) -> None:
+    """Stream events → watermark → tumbling-window counts per event_type."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    schema = spark.read.parquet(input_dir).schema
+    src = spark.readStream.schema(schema).parquet(input_dir)
+    # watermarks need TIMESTAMP (tz-aware); parquet yields TIMESTAMP_NTZ
+    src = src.withColumn("ts", F.col("ts").cast("timestamp"))
     q = (
-        agg.writeStream.format("parquet")
+        _window_counts(src.withWatermark("ts", WATERMARK))
+        .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -48,22 +55,8 @@ def windowed_event_counts_stream(
     q.awaitTermination()
 
 
-def windowed_event_counts_batch(spark: SparkSession, input_dir: str,
-                                window: str = "1 hour") -> DataFrame:
-    """The batch twin — streaming output (closed windows) must match it for
-    the SAME window size."""
+def windowed_event_counts_batch(spark: SparkSession, input_dir: str) -> DataFrame:
+    """The batch twin — streaming output (closed windows) must match it."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = spark.read.parquet(input_dir).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    return (
-        ev.groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("total"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "event_type",
-            "n",
-            "total",
-        )
-    )
+    return _window_counts(
+        spark.read.parquet(input_dir).withColumn("ts", F.col("ts").cast("timestamp")))
