@@ -95,15 +95,24 @@ def test_run_with_manifest_iceberg_branch(spark, tmp_path, monkeypatch):
     """The full manifest runner over the Iceberg sink with a mocked catalog:
     every non-empty bucket commits via writeTo().overwritePartitions() and
     records the read-back snapshot id as its lineage; empty buckets take
-    the explicit-DELETE path; a second run resumes to a no-op."""
+    the explicit-DELETE path; nothing is persisted; read_output reads the
+    table; a second run resumes to a no-op."""
     from univer_ocr_spark.generator.transcripts import transcripts_df
-    from univer_ocr_spark.spark.manifest import read_manifest, run_with_manifest
+    from univer_ocr_spark.spark.manifest import (
+        read_manifest,
+        read_output,
+        run_with_manifest,
+    )
 
     monkeypatch.setenv("UNIVER_ICEBERG_TABLE", "lake.db.extracted")
     part_ok = spark.createDataFrame(
         [], "partition struct<bucket:int>, record_count long"
     )
-    monkeypatch.setattr(type(spark), "table", lambda self, name: part_ok)
+    table_df = spark.createDataFrame([], "conv_id string")
+    monkeypatch.setattr(
+        type(spark), "table",
+        lambda self, name: part_ok if name.endswith(".partitions") else table_df,
+    )
 
     snap_ids = iter(range(1000, 2000))
     sql_seen: list[str] = []
@@ -117,6 +126,12 @@ def test_run_with_manifest_iceberg_branch(spark, tmp_path, monkeypatch):
     writeto = mock.MagicMock()
     # patch the CONCRETE DataFrame class (Spark 4 splits base/classic)
     monkeypatch.setattr(type(part_ok), "writeTo", writeto, raising=False)
+    persisted: list = []
+    real_persist = type(part_ok).persist
+    monkeypatch.setattr(
+        type(part_ok), "persist",
+        lambda self, *a, **k: persisted.append(self) or real_persist(self, *a, **k),
+    )
 
     df = transcripts_df(spark, 6, with_goldens=False)
     workdir = str(tmp_path / "icejob")
@@ -132,6 +147,8 @@ def test_run_with_manifest_iceberg_branch(spark, tmp_path, monkeypatch):
     deletes = [q for q in sql_seen if q.startswith("DELETE FROM lake.db.extracted")]
     assert len(deletes) == n_empty  # empty buckets delete their partition
     assert writeto.call_count == n_buckets - n_empty  # non-empty overwrite
+    assert persisted == []  # the row count reads the staged bucket
+    assert read_output(spark, workdir) is table_df
 
     # resume: everything committed under this lineage -> no-op
     assert run_with_manifest(spark, df, workdir, n_buckets=n_buckets) == []

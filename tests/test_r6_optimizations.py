@@ -21,10 +21,8 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def _survivor_sets(spark):
-    sigs = dedup._packed_sigs(
-        dedup._exploded_shingles(spark, SF_DIR, distinct=False)
-    )
-    cand = dedup._lsh_candidates_from_sigs(sigs, distinct=False)
+    sigs = dedup._packed_sigs(dedup._exploded_shingles(spark, SF_DIR))
+    cand = dedup._lsh_candidates_from_sigs(sigs)
     csig = F.transform("sigs", lambda s: ((s % 256) - 128).cast("tinyint"))
     csigs = sigs.select("doc_id", csig.alias("cs"))
     ca = csigs.select(F.col("doc_id").alias("doc_a"), F.col("cs").alias("a_cs"))

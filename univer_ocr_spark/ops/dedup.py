@@ -183,22 +183,15 @@ def _shingles_of(d: DataFrame) -> DataFrame:
         "doc_id", F.explode(_word_shingles_from_toks(F.col("toks"))).alias("shingle"))
 
 
-def _exploded_shingles(spark: SparkSession, sf_dir: str,
-                       distinct: bool = True) -> DataFrame:
-    # documents at test scale is one small parquet file = one partition; the
-    # shingle explode + hashing is CPU-heavy, so spread it across cores
-    # first (tiny shuffle; at 100 TB inputs are already many files).
-    #
-    # ``distinct`` (r6): paths that consume shingles as a SET (Jaccard sizes,
-    # SimHash bit votes) need the dedup; the MinHash signature path does NOT
-    # (min over duplicates is identical), so it passes distinct=False and
-    # skips the full-corpus (doc_id, shingle) shuffle outright. Catalyst's
-    # RemoveRedundantAggregates already elides the distinct when the min
-    # aggregate sits directly on top of it, but a persist()/checkpoint
-    # boundary between them (the verified-pairs pipeline) defeats the rule —
-    # the explicit flag makes the plan shape independent of that.
-    ex = _shingles_of(_docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism))
-    return ex.distinct() if distinct else ex
+def _exploded_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (doc_id, shingle) multiset; set consumers call ``.distinct()``,
+    and the MinHash signature path keeps duplicates because min is
+    duplicate-insensitive."""
+    # The documents file is one scan split here, and the shingle explode +
+    # hashing is CPU-heavy, so the spread stays until a size-aware rule
+    # exists: at sf0.1, local[4], dropping it took minhash_lsh_pairs
+    # 6.1-7.1 -> 14.9-15.6 s.
+    return _shingles_of(_docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism))
 
 
 # Permutation family: ONE md5 per shingle → a 60-bit h1 and a 60-bit h2
@@ -268,13 +261,10 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     (h1 + k*h2) mod 2^61-1 with (h1, h2) split from one md5 — a portable
     permutation family (see _perm_expr for the overflow-free evaluation).
     One shuffle (groupBy doc_id over exploded shingles), map-side combined;
-    the K mins are one wide aggregate, not K passes. distinct=False: min is
-    duplicate-insensitive, so the raw explode feeds the aggregate directly
-    (no full-corpus (doc_id, shingle) distinct shuffle; the oracle's
-    SELECT DISTINCT yields identical mins)."""
-    return _signatures_from(
-        _exploded_shingles(spark, sf_dir, distinct=False)
-    ).orderBy("doc_id")
+    the K mins are one wide aggregate, not K passes. ``doc_id`` must be
+    unique: the groupBy would merge the shingles of duplicate ids into one
+    signature."""
+    return _signatures_from(_exploded_shingles(spark, sf_dir)).orderBy("doc_id")
 
 
 def minhash_signatures_sql() -> str:
@@ -364,18 +354,13 @@ def bucket_pairs(df: DataFrame, keys: list, id_col: str = "doc_id") -> DataFrame
     ).select("p.doc_a", "p.doc_b")
 
 
-def _lsh_candidates_from_sigs(sigs: DataFrame, distinct: bool = True) -> DataFrame:
+def _lsh_candidates_from_sigs(sigs: DataFrame) -> DataFrame:
     """LSH banding over packed signatures (doc_id, sigs array): docs
     sharing any band key are candidate near-dups (bucket_pairs over
     (band, band_key)) — never an all-pairs cross join. Callers that also need the
     signatures elsewhere (the verify cascade) pass the same
-    ``_packed_sigs`` frame so the one wide aggregate runs once.
-
-    ``distinct`` (r6): a pair sharing several bands appears once per band;
-    the declared candidate-pair output needs the dedup, but the verify
-    cascade filters each copy identically and dedups AFTER its sketch
-    filter — on ~36k rows instead of ~9.25M at sf1.0 — so it passes
-    distinct=False here."""
+    ``_packed_sigs`` frame so the one wide aggregate runs once. A pair
+    sharing several bands appears once per band."""
     # bands fan out via ONE explode(transform(...)) expression over the
     # array (NOT 85 per-band structs, whose plan analysis dominated wall
     # time; NOT a union of re-derived frames, which would recompute the
@@ -399,14 +384,13 @@ def _lsh_candidates_from_sigs(sigs: DataFrame, distinct: bool = True) -> DataFra
         "doc_id", "bk.band", "bk.band_key"
     )
     # the sub-threshold S-curve keeps band buckets small
-    pairs = bucket_pairs(banded, ["band", "band_key"])
-    return pairs.distinct() if distinct else pairs
+    return bucket_pairs(banded, ["band", "band_key"])
 
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_candidates_from_sigs(
-        _packed_sigs(_exploded_shingles(spark, sf_dir, distinct=False))
-    ).orderBy("doc_a", "doc_b")
+        _packed_sigs(_exploded_shingles(spark, sf_dir))
+    ).distinct().orderBy("doc_a", "doc_b")
 
 
 def _lsh_cte_sql() -> str:
@@ -472,7 +456,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     forced broadcast OOMs the executors); AQE picks broadcast vs shuffle
     from the MEASURED size at runtime, which is the right call at every
     scale."""
-    ex_all = _exploded_shingles(spark, sf_dir).persist()  # one explode, 2 uses
+    ex_all = _exploded_shingles(spark, sf_dir).distinct().persist()  # one explode, 2 uses
     frequent = (
         ex_all.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -547,8 +531,8 @@ def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify ~36k pairs. Survivor-restricted inner joins make the outputs
     row-identical. No all-pairs stage anywhere.
     """
-    sigs = _packed_sigs(_exploded_shingles(spark, sf_dir, distinct=False))
-    cand = _lsh_candidates_from_sigs(sigs, distinct=False)
+    sigs = _packed_sigs(_exploded_shingles(spark, sf_dir))
+    cand = _lsh_candidates_from_sigs(sigs)
     # stage 1: compressed components (the -128 shift keeps the tinyint
     # cast in range under ANSI; the shift is a bijection so equality is
     # preserved). Derived per use from the checkpointed sigs — one HOF
@@ -816,7 +800,7 @@ def simhash_signatures_wide(
     # the shingles bind to this one query (spark.sql drops the bound view
     # after analysis), named by a CTE as in the DuckDB twin: no session view
     sql = "WITH shingled AS (SELECT * FROM {ex}),\n" + _simhash_select_wide(exprs)[5:]
-    return spark.sql(sql, ex=_exploded_shingles(spark, sf_dir))
+    return spark.sql(sql, ex=_exploded_shingles(spark, sf_dir).distinct())
 
 
 def simhash_signatures_wide_sql(width: int = 96) -> str:

@@ -63,8 +63,13 @@ _MARKUP_SAFE_SQL = f"""NOT ({_FLAT_SQL} LIKE '```%'
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single small file = one partition; the downstream extraction work is
-    # CPU-bound, so spread it (tiny shuffle, irrelevant at real scale)
+    # A full shuffle into `cores` partitions at any size, kept until a
+    # size-aware rule exists. On a one-split input it buys wall time for the
+    # CPU-bound extraction: at sf0.1, local[4], dropping it took
+    # extract_pdfish_docs 3.2-3.6 -> 11.4-12.4 s and
+    # extract_pdfish_columns_docs 3.3-3.4 -> 10.3-11.0 s. It costs CPU: at
+    # 550 docs, local[2], dropping it cut perfbench docs_extract
+    # cpu_ms_per_row 5.95 -> 4.87 (6/6 seed pairs).
     return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
         spark.sparkContext.defaultParallelism
     )

@@ -52,10 +52,7 @@ def _sign_band_bits(n: int) -> int:
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single small file = one partition; pair scoring is CPU-bound
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _corpus_count(e: DataFrame, sf_dir: str) -> int:

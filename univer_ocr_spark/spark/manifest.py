@@ -207,24 +207,20 @@ def run_with_manifest(
             raise RuntimeError(f"injected failure after {fail_after} buckets")
         t0 = time.time()
         part = staged.filter(F.col("bucket") == b).drop("bucket")
-        obs = Observation(f"bucket_{b}_rows_{int(t0 * 1e6)}")
-        out = run_extraction(part, drop_payload=True).observe(
-            obs, F.count(F.lit(1)).alias("n"))
+        out = run_extraction(part, drop_payload=True)
         if iceberg_table:
-            # the row count picks overwritePartitions or DELETE
-            # (_iceberg_commit); the persist stops the count and the commit
-            # from running the extraction twice
-            staged_out = out.withColumn("bucket", F.lit(b)).persist()
+            # extraction emits one row per input row, so the staged bucket's
+            # (pruned parquet) count picks overwritePartitions or DELETE
+            n_rows = part.count()
             output_snapshot = _iceberg_commit(
-                staged_out, iceberg_table, b, staged_out.count()
+                out.withColumn("bucket", F.lit(b)), iceberg_table, b, n_rows
             )
-            staged_out.unpersist()
         else:
-            out.write.mode("overwrite").parquet(
-                os.path.join(outdir, f"bucket={b}")
-            )
+            obs = Observation(f"bucket_{b}_rows_{int(t0 * 1e6)}")
+            out.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite").parquet(os.path.join(outdir, f"bucket={b}"))
+            n_rows = obs.get["n"]  # folded into the write — no re-read
             output_snapshot = ""
-        n_rows = obs.get["n"]  # folded into the write — no re-read
         wall = time.time() - t0
         row = {
             "bucket": b,
@@ -245,6 +241,12 @@ def run_with_manifest(
 
 
 def read_output(spark: SparkSession, workdir: str) -> DataFrame:
+    """What ``run_with_manifest`` wrote: the Iceberg table when
+    ``iceberg_table_name()`` routes the commits there, else the parquet
+    ``extracted/`` directory."""
+    table = iceberg_table_name()
+    if table:
+        return spark.table(table)
     return spark.read.parquet(os.path.join(workdir, "extracted"))
 
 

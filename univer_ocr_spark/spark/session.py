@@ -33,9 +33,6 @@ def get_spark(master: str | None = None, app_name: str = "univer_ocr_spark",
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # r6: 10 MB default is too timid for per-doc sketch/dimension tables
         # (e.g. the 255-component compressed MinHash sketch, ~25 MB at sf1.0)
         # whose broadcast keeps the Θ(n²·P) candidate stream unshuffled.
