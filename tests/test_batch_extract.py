@@ -27,6 +27,28 @@ MALFORMED = [
     "%PDFISH 100 200\ng a 1 2 3 99999999999999999999999999\n",
     f"%PDFISH 100 200\ng b 1 {2**62} 3 4\n",
     f"%PDFISH 100 200\ng c {2**61} 400 8 10\n",
+    # glyphs the vector path takes as one codepoint: Cyrillic, an astral
+    # emoji, NUL and whitespace-class chars; then a space glyph, which only
+    # the tolerant parser accepts
+    "%PDFISH 612 792\ng ж 100 400 8 10\ng \U0001F600 110 400 8 10\ng \x00 120 400 8 10\n"
+    "g \xa0 130 400 8 10\ng 　 140 400 8 10\ng \x0b 150 400 8 10\n",
+    "%PDFISH 612 792\ng a 100 400 8 10\ng   110 400 8 10\n",
+    # a page whose glyphs are all zero-width: every glyph is its own column,
+    # and columns at equal x keep input order (the batch path once ordered
+    # them by band)
+    "%PDFISH 2 1\ng a 0 0 0 0\ng a 1 0 0 0\ng a 0 0 1 0\n",
+    # a two-char glyph: the tolerant parser skips the line
+    "%PDFISH 612 792\ng a5 100 400 8 10\ng b 110 400 8 10\n",
+    # line ends: no trailing newline, CRLF, a blank line
+    "%PDFISH 612 792\ng a 100 400 8 10\ng b 110 400 8 10",
+    "%PDFISH 612 792\r\ng a 100 400 8 10\r\ng b 110 400 8 10\r\n",
+    "%PDFISH 612 792\ng a 100 400 8 10\n\ng b 110 400 8 10\n",
+    # numeric fields int() accepts that are not plain ASCII digit runs, and
+    # leading zeros (which are)
+    "%PDFISH 612 792\ng a +100 400 8 10\ng b 110 400 8 10\n",
+    "%PDFISH 612 792\ng a 1_00 400 8 10\ng b 110 400 8 10\n",
+    "%PDFISH 612 792\ng a 1٣0 400 8 10\ng b 110 400 8 10\n",
+    "%PDFISH 612 792\ng a 007 400 8 10\ng b 110 400 0008 10\n",
 ]
 
 
@@ -44,6 +66,56 @@ def test_pdfish_batch_equals_slow_path():
     res = extract_pdfish_many(payloads)
     for i, p in enumerate(payloads):
         assert res[i] == extract_pdfish(p), f"payload {i}"
+    # alone, too: a batch-wide mode (the glyph-level column pass that any
+    # mixed-height title turns on) must not mask a case
+    for i, p in enumerate(MALFORMED):
+        assert extract_pdfish_many([p]) == [extract_pdfish(p)], f"malformed {i}"
+
+
+def test_pdfish_fallback_is_per_payload(monkeypatch):
+    """A payload outside the vector path's line format (a negative y) takes
+    the tolerant parser alone; the rest of its batch stays vectorized."""
+    from univer_ocr_spark.extract import pdfish_batch
+
+    calls = []
+
+    def counting(payload):
+        calls.append(payload)
+        return extract_pdfish(payload)
+
+    monkeypatch.setattr(pdfish_batch, "extract_pdfish", counting)
+    negative = "%PDFISH 612 792\ng a 100 -400 8 10\n"
+    payloads = [generate_pdfish(Random(s))[0] for s in range(50)] + [negative]
+    res = extract_pdfish_many(payloads)
+    assert calls == [negative]
+    assert res == [extract_pdfish(p) for p in payloads]
+
+
+def test_pdfish_key_overflow_splits_the_batch(monkeypatch):
+    """When the batch's composite sort keys would pass the int64 limit, the
+    batch is halved until they fit, and only a payload that overflows
+    alone takes the tolerant parser. A lowered limit that the 50 pages
+    pass one by one, but not all together, forces the split."""
+    from univer_ocr_spark.extract import pdfish_batch
+
+    slow, batches = [], []
+    many = pdfish_batch.extract_pdfish_many
+
+    def counting_slow(payload):
+        slow.append(payload)
+        return extract_pdfish(payload)
+
+    def counting_many(payloads):
+        batches.append(len(payloads))
+        return many(payloads)
+
+    monkeypatch.setattr(pdfish_batch, "extract_pdfish", counting_slow)
+    monkeypatch.setattr(pdfish_batch, "extract_pdfish_many", counting_many)
+    monkeypatch.setattr(pdfish_batch, "_KEY_LIMIT", 10_000)
+    payloads = [generate_pdfish(Random(s))[0] for s in range(50)]
+    res = pdfish_batch.extract_pdfish_many(payloads)
+    assert res == [extract_pdfish(p) for p in payloads]
+    assert slow == [] and batches[0] == 50 and len(batches) > 1
 
 
 # pass-through columns of every input type the extraction stage must hand

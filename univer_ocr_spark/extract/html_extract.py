@@ -53,12 +53,34 @@ from univer_ocr_spark.spans import Span
 # alternation): after the tag name, runs of chars that are neither '>' nor
 # a quote, interleaved with complete quoted sections whose interior may
 # contain '>'. The HTML5 tokenizer's double/single-quoted attribute-value
-# states consume '>' exactly the same way.
+# states consume '>' exactly the same way. Both groups capture, so one
+# ``split`` yields [text, tag, key, text, tag, key, ..., text] — no match
+# object per tag — where ``key`` is the raw name with its closing slash.
 _TAG_RE = re.compile(
-    r"""<(/?)([a-zA-Z][a-zA-Z0-9]*)[^>"']*(?:"[^"]*"[^>"']*|'[^']*'[^>"']*)*>"""
+    r"""(<(/?[a-zA-Z][a-zA-Z0-9]*)[^>"']*(?:"[^"]*"[^>"']*|'[^']*'[^>"']*)*>)"""
 )
 _VOID_TAGS = frozenset({"br", "hr", "img", "meta", "link", "input"})
 _ENT_RE = re.compile(r"&(?:amp|lt|gt|quot|apos|#[0-9]{1,7}|#[xX][0-9a-fA-F]{1,6});")
+
+# tag kinds: an opening tag, a closing tag, a <br> (unit break), and a void
+# tag that does nothing
+_OPEN, _CLOSE, _BR, _VOID = range(4)
+# raw key -> (lowercased name, kind, drop, a, block): a memo of the pure
+# _tag_action, so its content never changes a result; capped, because a
+# hostile stream can hold any number of distinct names
+_TAG_ACTIONS: dict = {}
+_TAG_ACTIONS_MAX = 4096
+
+
+def _tag_action(key: str) -> Tuple[str, int, bool, bool, bool]:
+    closing = key[0] == "/"
+    name = (key[1:] if closing else key).lower()
+    if name in _VOID_TAGS:
+        kind = _BR if name == "br" and not closing else _VOID
+    else:
+        kind = _CLOSE if closing else _OPEN
+    return name, kind, name in HTML_DROP_TAGS, name == "a", name in HTML_BLOCK_TAGS
+
 
 # Extractor-side block record: (tag, nodes) with nodes = [(start, end,
 # in_link)] interleaved with None markers — a <br> inside the block. Each
@@ -72,75 +94,67 @@ ExtractorBlock = Tuple[str, bool, List[Tuple[int, int, bool] | None]]
 def parse_blocks(payload: str) -> List[ExtractorBlock]:
     """Single pass over tags; return all blocks in document-open order with
     their text nodes and a main/boilerplate classification."""
-    stack: List[str] = []
+    stack: List[tuple] = []  # actions of the open tags
     drop_depth = 0
     link_depth = 0
-    open_blocks: List[int] = []  # indices into `blocks`
-    blocks: List[List] = []  # [tag, nodes]
-    pos = 0
-
-    def handle_text(start: int, end: int) -> None:
-        if drop_depth > 0 or not open_blocks:
-            return
-        seg = payload[start:end]
-        if seg.isspace():
-            return
-        blocks[open_blocks[-1]][1].append((start, end, link_depth > 0))  # noqa: E501
-
-    for m in _TAG_RE.finditer(payload):
-        if m.start() > pos:
-            handle_text(pos, m.start())
-        pos = m.end()
-        g1, name = m.group(1, 2)
-        closing, name = g1 == "/", name.lower()
-        if name in _VOID_TAGS:
-            if (
-                name == "br"
-                and not closing
-                and drop_depth == 0
-                and open_blocks
-            ):
-                nodes = blocks[open_blocks[-1]][1]
-                if nodes and nodes[-1] is not None:
-                    nodes.append(None)  # unit break inside the block
-            continue
-        if closing:
+    open_blocks: List[list] = []
+    blocks: List[list] = []  # [tag, nodes, total chars, link chars]
+    parts = _TAG_RE.split(payload)
+    pos = len(parts[0])  # text before the first tag sits in no block
+    it = iter(parts)
+    next(it)
+    for tag, key, text in zip(it, it, it):
+        pos += len(tag)
+        act = _TAG_ACTIONS.get(key)
+        if act is None:
+            act = _tag_action(key)
+            if len(_TAG_ACTIONS) < _TAG_ACTIONS_MAX:
+                _TAG_ACTIONS[key] = act
+        kind = act[1]
+        if kind == _OPEN:
+            stack.append(act)
+            if act[2]:
+                drop_depth += 1
+            if act[3]:
+                link_depth += 1
+            if act[4]:
+                block = [act[0], [], 0, 0]
+                open_blocks.append(block)
+                blocks.append(block)
+        elif kind == _CLOSE:
             # tolerant pop to the matching open tag
+            name = act[0]
             while stack:
                 top = stack.pop()
-                if top in HTML_DROP_TAGS:
+                if top[2]:
                     drop_depth -= 1
-                if top == "a":
+                if top[3]:
                     link_depth -= 1
-                if top in HTML_BLOCK_TAGS and open_blocks:
+                if top[4] and open_blocks:
                     open_blocks.pop()
-                if top == name:
+                if top[0] == name:
                     break
-        else:
-            stack.append(name)
-            if name in HTML_DROP_TAGS:
-                drop_depth += 1
-            if name == "a":
-                link_depth += 1
-            if name in HTML_BLOCK_TAGS:
-                open_blocks.append(len(blocks))
-                blocks.append([name, []])
+        elif kind == _BR and drop_depth == 0 and open_blocks:
+            nodes = open_blocks[-1][1]
+            if nodes and nodes[-1] is not None:
+                nodes.append(None)  # unit break inside the block
+        if text:
+            end = pos + len(text)
+            if drop_depth == 0 and open_blocks and not text.isspace():
+                block = open_blocks[-1]
+                block[1].append((pos, end, link_depth > 0))
+                block[2] += end - pos
+                if link_depth:
+                    block[3] += end - pos
+            pos = end
 
-    if pos < len(payload):  # trailing text after the last tag (malformed doc)
-        handle_text(pos, len(payload))
-
-    out: List[ExtractorBlock] = []
-    for tag, nodes in blocks:
-        real = [n for n in nodes if n is not None]
-        total = sum(e - s for s, e, _ in real)
-        link = sum(e - s for s, e, in_link in real if in_link)
-        # density classifies the whole BLOCK (boilerplate-ness is a block
-        # property); <br> markers only affect unit segmentation
-        is_main = total > 0 and (
-            HTML_LINK_DENSITY_DEN * link <= HTML_LINK_DENSITY_NUM * total
-        )
-        out.append((tag, is_main, nodes))
-    return out
+    # density classifies the whole BLOCK (boilerplate-ness is a block
+    # property); <br> markers only affect unit segmentation
+    return [
+        (tag, total > 0
+         and HTML_LINK_DENSITY_DEN * link <= HTML_LINK_DENSITY_NUM * total, nodes)
+        for tag, nodes, total, link in blocks
+    ]
 
 
 def extract_html(payload: str) -> Tuple[str, List[Span]]:

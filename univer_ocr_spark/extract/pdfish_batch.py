@@ -8,13 +8,24 @@ at ~130 glyphs/payload (fixed overhead), but across a 2048-turn Arrow batch
 (~270k glyphs) the int-parse, orientation vote, column/band interval-merge,
 sort and space/gap logic all amortize into a handful of vectorized kernels.
 
+The front half never makes a per-token ``str``: the batch's bodies are
+joined and viewed as ONE UTF-32 codepoint array (4 B/char), whose newlines
+are the lines. Per-line counts and fixed offsets validate the record
+format, digit runs become ints by place value, and the glyph is the
+codepoint after ``"g "``. Spans are char offsets, so codepoint positions
+are span offsets as they stand (astral glyphs are one codepoint, as in a
+Python ``str``). The back half writes each kept glyph's lead char and
+codepoint into one output array, decodes it once and slices each payload's
+text out of it.
+
 Semantics are identical to extract_pdfish (property-tested equal): 4-way
 orientation vote (aspect + margin-excluded mass-center), spanning-block
 pre-pass (full-width titles emit as their own segments; columns cluster
 per region between them), x-gap column clustering, y-band merging, margin
 strip, reading order, word-gap spaces.
-Payloads that fail strict-format validation fall back to the tolerant
-per-payload parser individually.
+A payload that fails the strict record format (a sign, a non-ASCII digit,
+a blank line, a coordinate above 2**31, ...) falls back to the tolerant
+per-payload parser on its own; the rest of the batch stays vectorized.
 """
 
 from __future__ import annotations
@@ -39,16 +50,91 @@ from univer_ocr_spark.spans import Span
 Result = Tuple[str, List[Span]]
 
 _COORD_BOUND = 2**31  # larger coords/dims → tolerant path (keying math)
+# digits per coordinate field: 2**31 has 10, so a longer run (leading zeros)
+# goes to the tolerant path — and no run can overflow the int64 place sum
+_FIELD_DIGITS = 10
+# composite (payload, segment, coord) sort keys must stay below this
+_KEY_LIMIT = 2**62
+_PAD = "\0" * 16  # after the last line: fixed-offset reads never run off the array
 
 
-def _body_well_formed(body: str) -> bool:
-    """Cheap C-level scans that guarantee single-space separation (what the
-    offset math assumes). Structural alignment is then enforced by the
-    set/length/int checks below — a payload passing all of them but still
-    misaligned would require adversarially crafted input, and even then the
-    failure mode is wrong-output-for-that-row, never a crash."""
-    return not ("  " in body or "\t" in body or "\n " in body or " \n" in body
-                or body.startswith(" "))
+def _scan_bodies(bodies: List[str]):
+    """Validate, tokenize and int-parse every body of the batch as ONE UTF-32
+    codepoint array — no per-token ``str`` objects.
+
+    Each body ends with ``\n``. A body passes iff every line is exactly
+    ``g <ch> <f> <f> <f> <f>``: single spaces, one glyph codepoint (any
+    char but the space) and four runs of ASCII digits, each at most
+    ``_FIELD_DIGITS`` long and at most ``_COORD_BOUND``. Anything else —
+    ``+5``, ``1_0``, ``٣``, a ``-``, a ``\r``, a blank line — fails its
+    body, which the caller routes to the tolerant parser (output-identical:
+    batch == row is the property).
+
+    Returns ``(ok, counts, starts, chs, nums)``: per body whether it passed,
+    then for the lines of passing bodies only their count per body, start
+    offset within the body, glyph codepoint and ``(4, G)`` int fields (x, y, wd, ht).
+    """
+    blen = np.fromiter(map(len, bodies), dtype=np.int64, count=len(bodies))
+    bstart = np.zeros(len(bodies) + 1, dtype=np.int64)
+    np.cumsum(blen, out=bstart[1:])
+    cp = np.frombuffer(
+        "".join([*bodies, _PAD]).encode("utf-32-le", "surrogatepass"),
+        dtype=np.uint32,
+    )
+    is_sp = cp == 32
+    is_dig = (cp - 48) < 10  # uint32 wrap-around: ASCII '0'..'9' only
+    nl = np.flatnonzero(cp == 10)
+    ls = np.empty_like(nl)
+    ls[0] = 0
+    ls[1:] = nl[:-1] + 1
+    # per-line counts: a reduceat over the line starts (each segment is one
+    # line plus its '\n'; the last also holds the pad) — 3x cheaper than a
+    # char-length cumsum
+    nsp = np.add.reduceat(is_sp.view(np.uint8), ls, dtype=np.int32)
+    ndg = np.add.reduceat(is_dig.view(np.uint8), ls, dtype=np.int32)
+
+    # per line: 'g', a space, the glyph, a space, then a region of 3
+    # spaces (5 in the line: the glyph is not one) and L-7 digits, i.e.
+    # nothing but digits and spaces. The field check below then makes the
+    # region four digit runs: a space glyph or two adjacent spaces leave an
+    # empty field
+    L = nl - ls
+    ok = (
+        (cp[ls] == 103)
+        & is_sp[ls + 1]
+        & is_sp[ls + 3]
+        & (nsp == 5)
+        & (ndg - is_dig[ls + 2] == L - 7)
+    )
+    # the region's spaces are the line's 3rd..5th; every field between them
+    # holds 1.._FIELD_DIGITS digits. Fields are rows of (4, n) arrays, so
+    # every reduction runs along a long axis
+    idx = np.flatnonzero(ok)
+    sp_before = np.cumsum(nsp) - nsp  # index of each line's first space
+    s = np.flatnonzero(is_sp)[sp_before[idx] + np.arange(2, 5)[:, None]]
+    fe = np.vstack((s, nl[idx]))
+    flen = fe - np.vstack((ls[idx] + 4, s + 1))
+    fit = np.all((flen >= 1) & (flen <= _FIELD_DIGITS), axis=0)
+    # place-value sum, least significant digit first; fields still longer
+    # than k are the only ones gathered at step k
+    fe = fe.ravel() - 1
+    flen = flen.ravel()
+    nums = cp[fe].astype(np.int64) - 48
+    at = np.flatnonzero(flen > 1)
+    for k in range(1, _FIELD_DIGITS):
+        at = at[flen[at] > k]
+        if not at.size:
+            break
+        nums[at] += (cp[fe[at] - k].astype(np.int64) - 48) * 10**k
+    nums = nums.reshape(4, -1)
+    ok[idx] = fit & np.all(nums <= _COORD_BOUND, axis=0)
+
+    lbound = np.searchsorted(nl, bstart)  # each body's first line, + end
+    ok_p = np.logical_and.reduceat(ok, lbound[:-1])
+    nlines = np.diff(lbound)
+    keep = np.repeat(ok_p, nlines)
+    starts = ls[keep] - np.repeat(bstart[:-1], nlines)[keep]
+    return ok_p, nlines[ok_p], starts, cp[ls[keep] + 2], nums[:, keep[idx]]
 
 
 def _margin_mask(c2: np.ndarray, dim: np.ndarray) -> np.ndarray:
@@ -62,15 +148,13 @@ def _margin_mask(c2: np.ndarray, dim: np.ndarray) -> np.ndarray:
 def extract_pdfish_many(payloads: Sequence[str]) -> List[Result]:
     results: List[Result] = [None] * len(payloads)  # type: ignore[list-item]
 
-    # ---- per-payload light validation + line collection (C-level splits)
-    pids: List[int] = []
-    all_lines: List[str] = []
-    all_chs: List[str] = []
-    counts: List[int] = []
+    # ---- page header per payload (a split and two int()s); the bodies are
+    # checked and parsed batch-wide by _scan_bodies
+    cand: List[int] = []
+    bodies: List[str] = []
     hdr_len: List[int] = []
     page_ws: List[int] = []
     page_hs: List[int] = []
-    num_toks: List[str] = []
     for i, p in enumerate(payloads):
         nl = p.find("\n")
         hdr = p[:nl].split(" ") if nl != -1 else []
@@ -85,72 +169,38 @@ def extract_pdfish_many(payloads: Sequence[str]) -> List[Result]:
         if abs(page_w) > _COORD_BOUND or abs(page_h) > _COORD_BOUND:
             results[i] = extract_pdfish(p)  # dims outside int64-safe math
             continue
-        body = p[nl + 1 :]
-        if not body:
+        if nl + 1 == len(p):
             results[i] = ("", [])
             continue
-        lines = body.split("\n")
-        if lines and lines[-1] == "":
-            lines.pop()
-        toks = body.split()
-        if (
-            not lines
-            or len(toks) != 6 * len(lines)
-            or not _body_well_formed(body)
-        ):
-            results[i] = extract_pdfish(p)
-            continue
-        chs = toks[1::6]
-        # per-line arity: with single-space separation guaranteed above,
-        # exactly 5 spaces per line <=> exactly 6 tokens per line; without
-        # this, a 10-token line + a 2-token line can masquerade as aligned
-        if (
-            set(toks[0::6]) != {"g"}
-            or max(map(len, chs)) != 1
-            or not all(ln.count(" ") == 5 for ln in lines)
-        ):
-            results[i] = extract_pdfish(p)
-            continue
-        pids.append(i)
-        counts.append(len(lines))
-        all_lines.extend(lines)
-        all_chs.extend(chs)
-        del toks[0::6]  # drop 'g'
-        del toks[0::5]  # drop <ch> (now at stride-5 position 0)
-        num_toks.extend(toks)
+        body = p[nl + 1 :]
+        cand.append(i)
+        bodies.append(body if body.endswith("\n") else body + "\n")
         hdr_len.append(nl + 1)
         page_ws.append(page_w)
         page_hs.append(page_h)
 
+    if not cand:
+        return results
+    ok_p, cnt, starts, chs, nums = _scan_bodies(bodies)
+    pids: List[int] = []
+    for i, ok in zip(cand, ok_p.tolist()):
+        if ok:
+            pids.append(i)
+        else:
+            results[i] = extract_pdfish(payloads[i])
     if not pids:
         return results
 
-    G = len(all_chs)
+    G = len(chs)
     P = len(pids)
-    cnt = np.asarray(counts, dtype=np.int64)
     gstart = np.zeros(P, dtype=np.int64)
     np.cumsum(cnt[:-1], out=gstart[1:])
     pid = np.repeat(np.arange(P, dtype=np.int64), cnt)
-
-    try:
-        nums = np.asarray(num_toks, dtype=np.int64)
-    except (ValueError, OverflowError):
-        # a non-integer or >int64 field somewhere: route every vector-path
-        # payload through the tolerant parser (rare, malformed data only)
-        for i in pids:
-            results[i] = extract_pdfish(payloads[i])
-        return results
-    nums = nums.reshape(G, 4)
-    x, y, wd, ht = nums[:, 0], nums[:, 1], nums[:, 2], nums[:, 3]
-    if min(y.min(), ht.min(), x.min(), wd.min()) < 0 or nums.max() > _COORD_BOUND:
-        # negative coords/extents, or coords big enough that the offset-key
-        # band/column math could wrap int64 → tolerant per-row path
-        for i in pids:
-            results[i] = extract_pdfish(payloads[i])
-        return results
-
-    pw = np.asarray(page_ws, dtype=np.int64)
-    ph = np.asarray(page_hs, dtype=np.int64)
+    x, y, wd, ht = nums
+    # char offset of each glyph in its raw payload: header + line start + "g "
+    offs = starts + np.asarray(hdr_len, dtype=np.int64)[ok_p][pid] + 2
+    pw = np.asarray(page_ws, dtype=np.int64)[ok_p]
+    ph = np.asarray(page_hs, dtype=np.int64)[ok_p]
 
     # ---- 4-way orientation vote per payload (A9 analog):
     # aspect (Σwd vs Σht) → portrait/landscape; margin-excluded mass-center
@@ -186,13 +236,6 @@ def extract_pdfish_many(payloads: Sequence[str]) -> List[Result]:
     bh = np.where(portrait_g, ht, wd)
     negband_p = (orient_p == 1) | (orient_p == 2)  # band coords were negated
     dim_p = np.where((orient_p == 0) | (orient_p == 2), ph, pw)
-
-    # ---- char offsets into each raw payload
-    lens = np.fromiter(map(len, all_lines), dtype=np.int64, count=G)
-    ends_rel = np.cumsum(lens + 1)
-    starts_rel = ends_rel - (lens + 1)
-    base = np.asarray(hdr_len, dtype=np.int64) - starts_rel[gstart]
-    offs = starts_rel + np.repeat(base, cnt) + 2
 
     # ---- spanning-block pre-pass (r3; r4 run-level — mirrors the slow
     # path exactly): page-global y-bands are split into x-runs (the
@@ -317,11 +360,16 @@ def extract_pdfish_many(payloads: Sequence[str]) -> List[Result]:
         demote_g = run_split[grun] & ~tall_g
         seg_g = np.where(demote_g, region_seg_of_run[grun], seg_g)
     segbound = int(seg_g.max()) + 1
-    if (P * segbound + 1) * int(bigx) > 2 ** 62:
+    if (P * segbound + 1) * int(bigx) > _KEY_LIMIT:
         # composite segment keys would overflow int64 — adversarial-scale
-        # coords only; route through the tolerant per-row parser
-        for i in pids:
-            results[i] = extract_pdfish(payloads[i])
+        # coords only. The bound grows with P, so halve the batch until it
+        # fits; a payload that overflows alone takes the tolerant parser
+        if P == 1:
+            results[pids[0]] = extract_pdfish(payloads[pids[0]])
+        else:
+            for part in (pids[: P // 2], pids[P // 2 :]):
+                for i, r in zip(part, extract_pdfish_many([payloads[i] for i in part])):
+                    results[i] = r
         return results
     greg_of_run = run_pid * segbound + seg_of_run
 
@@ -357,7 +405,11 @@ def extract_pdfish_many(payloads: Sequence[str]) -> List[Result]:
         run_thresh = thresh_p[run_pid]
         rkey = run_x_lo + greg_of_run * bigx
         rend = run_x_hi + greg_of_run * bigx
-        ordr = np.argsort(rkey, kind="stable")
+        # equal keys tie-break by input order, as the slow path's stable
+        # x-sort of the region does. Ties only split columns when the
+        # page's gap threshold is 0 (every glyph zero-width), and then every
+        # run is one glyph, so its first glyph's index is the input order
+        ordr = np.lexsort((bord[run_first], rkey))
         rrun_end = np.maximum.accumulate(rend[ordr])
         brkc = np.empty(NR, dtype=bool)
         brkc[0] = True
@@ -408,32 +460,27 @@ def extract_pdfish_many(payloads: Sequence[str]) -> List[Result]:
         & (PDFISH_SPACE_DEN * gap[1:] >= PDFISH_SPACE_NUM * w2[:-1])
     )
 
-    keep_g = keep_band[band2]
-    new_band = ~same  # first glyph of its band (in reading order)
-    # lead char: '\n' before a band that isn't the payload's first KEPT band,
-    # ' ' on word gaps, '' otherwise
-    is_first_kept_band = unit_of_band[band2] == 0
-    pieces = [all_chs[j] for j in g2.tolist()]
-    for j in np.flatnonzero(space).tolist():
-        pieces[j] = " " + pieces[j]
-    for j in np.flatnonzero(new_band & ~is_first_kept_band).tolist():
-        pieces[j] = "\n" + pieces[j]
-
-    # ---- assemble per payload (glyphs are pid-contiguous in reading order);
-    # the kept-glyph selection and the three span columns materialize ONCE
-    # globally — per-payload work is pure list slicing (was a per-payload
-    # flatnonzero + fancy-index + tolist: measured ~2.5x slower)
-    sel_all = np.flatnonzero(keep_g)
-    kept_bounds = np.searchsorted(pid[g2][sel_all], np.arange(P + 1))
-    u_all = unit_of_band[band2][sel_all].tolist()
-    o_arr = offs[g2][sel_all]
-    o_all = o_arr.tolist()
-    e_all = (o_arr + 1).tolist()
-    kept_pieces = [pieces[j] for j in sel_all.tolist()]
+    # ---- assemble: the kept glyphs' codepoints in reading order, each
+    # preceded by its lead char ('\n' before a band that isn't the payload's
+    # first KEPT band, ' ' on word gaps, none otherwise), decoded ONCE; each
+    # payload's text and spans are slices (glyphs are pid-contiguous)
+    sel = np.flatnonzero(keep_band[band2])
+    g_sel = g2[sel]
+    unit_sel = unit_of_band[band2[sel]]
+    newline = ~same[sel] & (unit_sel != 0)
+    has_lead = space[sel] | newline
+    pos = np.arange(sel.size) + np.cumsum(has_lead)  # glyph slot in out
+    out = np.empty(sel.size + int(has_lead.sum()), dtype=np.uint32)
+    out[pos] = chs[g_sel]
+    out[pos[has_lead] - 1] = np.where(newline[has_lead], 10, 32)
+    text = out.tobytes().decode("utf-32-le", "surrogatepass")
+    kept_bounds = np.searchsorted(pid[g_sel], np.arange(P + 1))
+    lead_before = np.zeros(sel.size + 1, dtype=np.int64)
+    np.cumsum(has_lead, out=lead_before[1:])
+    tb = (kept_bounds + lead_before[kept_bounds]).tolist()
+    o_sel = offs[g_sel]
+    spans = list(zip(unit_sel.tolist(), o_sel.tolist(), (o_sel + 1).tolist()))
+    kb = kept_bounds.tolist()
     for k in range(P):
-        lo, hi = int(kept_bounds[k]), int(kept_bounds[k + 1])
-        results[pids[k]] = (
-            "".join(kept_pieces[lo:hi]),
-            list(zip(u_all[lo:hi], o_all[lo:hi], e_all[lo:hi])),
-        )
+        results[pids[k]] = (text[tb[k] : tb[k + 1]], spans[kb[k] : kb[k + 1]])
     return results
